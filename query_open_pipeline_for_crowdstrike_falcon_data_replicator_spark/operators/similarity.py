@@ -1371,7 +1371,7 @@ _IVF_META = "_ivf_meta.json"
 def _ivf_meta_io(spark: SparkSession, index_path: str):
     import posixpath
 
-    from ..sinks.txn import _fs, _jpath, _read_text, _write_text
+    from ..sinks.fsutil import _fs, _jpath, _read_text, _write_text
 
     fs, _ = _fs(spark, index_path)
     meta_path = posixpath.join(index_path, _IVF_META)
@@ -1479,7 +1479,7 @@ def ivf_refresh_index(
         # drift: retrain on the union (corpus vectors come from the index
         # itself — unit vectors are invariant under re-normalization, so
         # the union frame feeds the same train/assign path as a build)
-        from ..sinks.txn import _fs, _jpath
+        from ..sinks.fsutil import _fs, _jpath
 
         corpus = spark.read.parquet(index_path).select(
             F.col("neighbor_id").alias("vec_id"), F.col("cu").alias("u")

@@ -35,6 +35,23 @@ def normalized_tables_with_cast_quarantine(
     return tables, failures
 
 
+def batch_sinks(spark: SparkSession, parsed: DataFrame) -> dict[str, DataFrame]:
+    """Every sink of one parsed batch, keyed by its path under the lake
+    root: the 13 normalized tables (``TABLE_KEYS`` order, no partition
+    columns yet) followed by the 4 ``_quarantine/*`` frames.  Batch and
+    stream both build their writes from this one dict."""
+    tables, cast_failures = normalized_tables_with_cast_quarantine(
+        classify(parsed, spark)
+    )
+    return {
+        **tables,
+        "_quarantine/cast_failures": cast_failures,
+        "_quarantine/corrupt_lines": corrupt_lines(parsed),
+        "_quarantine/no_discriminator": no_discriminator(parsed).drop("raw"),
+        "_quarantine/unmapped_events": unmapped_events(parsed, spark),
+    }
+
+
 def process_batch(
     spark: SparkSession,
     parsed: DataFrame,
@@ -50,28 +67,16 @@ def process_batch(
     filter), and re-reading + re-parsing gzip JSON would dominate."""
     parsed.persist()
     try:
-        classified = classify(parsed, spark)
-        tables, cast_failures = normalized_tables_with_cast_quarantine(classified)
+        sinks = batch_sinks(spark, parsed)
         write_ocsf_tables(
-            tables,
+            {key: sinks.pop(key) for key in TABLE_KEYS},
             base_path,
             region=region,
             account_id=account_id,
             mode=mode,
         )
-        quarantine = os.path.join(base_path, "_quarantine")
-        cast_failures.write.mode(mode).parquet(
-            os.path.join(quarantine, "cast_failures")
-        )
-        corrupt_lines(parsed).write.mode(mode).parquet(
-            os.path.join(quarantine, "corrupt_lines")
-        )
-        no_discriminator(parsed).drop("raw").write.mode(mode).parquet(
-            os.path.join(quarantine, "no_discriminator")
-        )
-        unmapped_events(parsed, spark).write.mode(mode).parquet(
-            os.path.join(quarantine, "unmapped_events")
-        )
+        for key, df in sinks.items():  # the 4 quarantines
+            df.write.mode(mode).parquet(os.path.join(base_path, key))
     finally:
         parsed.unpersist()
 
@@ -97,4 +102,4 @@ def run_batch(
     )
 
 
-__all__ = ["process_batch", "run_batch", "parse_fdr_lines"]
+__all__ = ["batch_sinks", "process_batch", "run_batch", "parse_fdr_lines"]

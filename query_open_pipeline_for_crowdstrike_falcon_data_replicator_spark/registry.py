@@ -158,10 +158,6 @@ ZERO_SIGNAL_SF001 = {
     "embedding_neardup_pairs",
 }
 
-# kept for external references; the historical per-entry rotation notes
-# now live as data in verification.DRIVER_HISTORY
-DRIVER_EXCLUDE = STRUCTURAL_EXCLUDE
-
 # Always-in slots: the three relational anchors plus the two write-path
 # probes (batch 13-sink lake + curate->pack->shard export) — these gate
 # regressions on the reference's PRIMARY dataflow every round.

@@ -58,9 +58,10 @@ def get_spark(
         # once the cache materializes and recognizes its hashpartitioning,
         # so pagerank/LPA shuffle-record counts are identical with and
         # without spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
-        # = false (tools/shuffle_probe.py: 4043/3987 records either way).
-        # The config is therefore left at its default; judge runtime plan
-        # claims with shuffle_probe, not explain() dumps.
+        # = false (runtime shuffle-write records from the status store:
+        # 4043/3987 either way).  The config is therefore left at its
+        # default; judge runtime plan claims with status-store stage
+        # metrics (``perfbench/tracing.stage_totals``), not explain() dumps.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

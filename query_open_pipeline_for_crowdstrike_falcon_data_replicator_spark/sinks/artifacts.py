@@ -11,8 +11,8 @@ path is keyed only by the sf-dir basename (ADVICE r4):
 2. racing — this box runs the round driver alongside bench/pytest, and
    two sessions can interleave ``mode=overwrite`` writes at one path.
 
-The fix mirrors the txn sink's marker/rename protocol
-(``sinks/txn.py``): salt the path with a cheap corpus fingerprint
+The fix is a stage-then-rename publish: salt the path with a cheap
+corpus fingerprint
 (row count x max id — changes whenever the generator reruns), build
 into a process-unique staging sibling, and publish with one atomic
 ``os.rename``.  A loser of the rename race discards its staging copy

@@ -1,9 +1,10 @@
 """Snapshot-isolated versioned parquet tables (Delta-lite, no deps).
 
-``sinks/compact.py`` rewrites files in place behind a recovery manifest —
-correct, but readers that list the directory mid-swap need a maintenance
-window.  This module removes that window with the standard lakehouse
-trick (Delta/Iceberg/Hudi): the table's state is an immutable, versioned
+Every streamed commit in the package lands here (``run_stream``'s 17
+sinks, the EWMA monitor, the maintenance twins).  A table whose files
+are rewritten in place would need a reader maintenance window for
+compaction; this module has none, by the standard lakehouse trick
+(Delta/Iceberg/Hudi): the table's state is an immutable, versioned
 **manifest** (the list of data files), and readers plan from a manifest,
 never from a directory listing.
 
@@ -64,7 +65,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .txn import _fs, _jpath, _list_files, _qualified, _read_text
+from .fsutil import _fs, _jpath, _list_files, _qualified, _read_text
 
 _SNAP_DIR = "_snapshots"
 _DATA_DIR = "data"

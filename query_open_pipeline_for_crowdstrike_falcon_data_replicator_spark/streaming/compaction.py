@@ -9,8 +9,8 @@ toward a full scan.  ``sinks/snapshot.compact_snapshot`` already
 re-clusters a table and tightens its ranges (per-batch appends each
 cover the whole key range, so compaction is precisely when the ranges
 become disjoint again); this module is the missing scheduler — the
-long-running-stream analogue of ``streaming/pipeline.run_stream``'s
-directory-table ``compact_every``.
+twins' analogue of ``streaming/pipeline.run_stream``'s ``compact_every``,
+adding the txn-mark fence and a live-file-count trigger.
 
 Replay semantics: compaction is fenced on the twin's txn high-water
 mark.  It fires only when the CANONICAL table's mark for this writer is

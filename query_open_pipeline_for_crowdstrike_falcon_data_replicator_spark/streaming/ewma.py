@@ -149,13 +149,15 @@ def run_ewma_monitor(
     output_path: str | None = None,
 ):
     """File-source driver: NDJSON events -> EWMA rows.  With
-    ``output_path`` the rows append to parquet via foreachBatch (the
-    sink that supports CHECKPOINT RECOVERY — a restart with the same
-    checkpoint resumes the per-key state and processes only new files).
-    The append is fenced on the micro-batch id
-    (``txn.append_batch_exactly_once``): a batch replayed after a crash
-    between the write and the checkpoint advance un-publishes its dead
-    predecessor's files first, so recovery is exactly-once for OUTPUT as
+    ``output_path`` the rows append to a snapshot table via foreachBatch
+    (the sink that supports CHECKPOINT RECOVERY — a restart with the same
+    checkpoint resumes the per-key state and processes only new files;
+    read it back with ``read_snapshot``).  Each batch commits with
+    ``write_snapshot(txn_app=<checkpoint hash>, txn_version=batch_id)``:
+    a batch replayed after a crash between the commit and the checkpoint
+    advance writes nothing (it still runs the stateful plan, so the
+    state stores commit), and one that died before its commit left only
+    unreferenced staged files, so recovery is exactly-once for OUTPUT as
     well as state.  Without ``output_path``, a memory sink (single-run
     inspection only — Spark's memory sink cannot recover from a
     checkpoint)."""
@@ -176,11 +178,22 @@ def run_ewma_monitor(
     )
     out = ewma_monitor(stream)
     if output_path is not None:
-        from ..sinks.txn import append_batch_exactly_once
+        import hashlib
 
-        writer = out.writeStream.foreachBatch(
-            lambda df, bid: append_batch_exactly_once(df, output_path, bid)
-        )
+        from ..sinks.snapshot import write_snapshot
+
+        app = "ewma-" + hashlib.md5(checkpoint.encode()).hexdigest()[:12]
+
+        def _sink(df, batch_id: int) -> None:
+            if write_snapshot(
+                spark, df, output_path, txn_app=app, txn_version=batch_id
+            ) is None:
+                # a fenced replay must still run the stateful plan: Spark
+                # fails the batch unless every state store partition
+                # commits (STATE_STORE_COMMIT_VALIDATION_FAILED)
+                df.write.format("noop").mode("overwrite").save()
+
+        writer = out.writeStream.foreachBatch(_sink)
     else:
         writer = out.writeStream.format("memory").queryName(queryName).outputMode(
             "append"

@@ -195,7 +195,7 @@ def extend_lm(
     # higher-order deltas — silently wrong scores.  Pin it in a meta
     # file on first batch, validate ever after (the annmaint/_META
     # pattern; write-once, so replay-safe).
-    from ..sinks.txn import json_meta_io
+    from ..sinks.fsutil import json_meta_io
 
     read_meta, write_meta = json_meta_io(spark, out_path, "_lm_meta.json")
     meta = read_meta()

@@ -9,10 +9,17 @@ maxFilesPerTrigger (SURVEY.md §1.4)."""
 
 from __future__ import annotations
 
+import hashlib
+import os
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..pipeline import process_batch
+from ..ocsf.schemas import TABLE_KEYS
+from ..pipeline import batch_sinks
+from ..sinks import snapshot as snap
+from ..sinks.parquet import with_partition_cols
 from ..sources.fdr import read_fdr_stream
 
 
@@ -26,10 +33,8 @@ def run_stream(
     account_id: str = "000000000000",
     max_files_per_trigger: int | None = 10,
     trigger: dict | None = None,
-    exactly_once: bool = False,
-    snapshot: bool = False,
+    snapshot: bool = True,
     compact_every: int | None = None,
-    compact_min_files: int = 4,
     vacuum_every: int | None = None,
     vacuum_keep_last: int = 2,
     vacuum_min_age_seconds: float = 3600.0,
@@ -38,194 +43,85 @@ def run_stream(
     ``availableNow`` (catch-up/replay mode); pass e.g.
     ``{"processingTime": "120 seconds"}`` for the reference's cadence.
 
-    exactly_once=False (default): plain appends — no reprocessing of
-    completed batches, at-least-once on a MID-batch failure (the
-    reference Firehose's semantics).  exactly_once=True: each batch's
-    table files publish through the manifest-fenced commit in
-    ``sinks/txn.py`` (stage -> manifest -> rename -> marker), so a
-    replayed half-written batch first un-publishes its own files —
-    effectively-once for the 13 OCSF tables.  Quarantine side outputs
-    remain append-mode diagnostics in both modes.
-
-    snapshot=True: each micro-batch commits every table as a new
-    ``sinks/snapshot.py`` manifest version — snapshot isolation for
-    readers (``read_snapshot``), exactly-once on replay via the
-    manifest's per-writer txn high-water mark (keyed by the checkpoint,
-    so a new checkpoint is a new writer identity, matching the source's
-    own replay scope), and inline compaction becomes ``compact_snapshot``
-    with NO reader maintenance window.  Partition columns
+    Each micro-batch commits every sink of ``pipeline.batch_sinks`` —
+    the 13 OCSF tables and the 4 ``_quarantine/*`` tables — as a new
+    ``sinks/snapshot.py`` manifest version.  Readers get snapshot
+    isolation (``read_snapshot``).  A replay is exactly-once through the
+    manifest's per-writer txn high-water mark, keyed by the checkpoint:
+    a new checkpoint is a new writer identity, matching the source's own
+    replay scope.  Each table is fenced on its own, so a batch that died
+    after committing some sinks replays only the rest.  Partition columns
     (region/accountId/eventDay) are kept as data columns: snapshot reads
     plan from explicit file lists, where Hive-style dir inference does
     not apply; eventDay file-skipping comes from parquet row-group stats
-    (micro-batches are naturally day-clustered).
+    (micro-batches are naturally day-clustered).  The Hive-partitioned
+    directory lake is the batch path's (``pipeline.run_batch``).
 
-    compact_every=N runs the small-file compactor after each N-th batch,
-    inside foreachBatch: ``sinks/compact.py`` (directory tables — the
-    stream is the only writer, so the swap window has no concurrent
-    appender; crash mid-swap replays to convergence) or
-    ``compact_snapshot`` (snapshot tables — a new version, readers keep
-    their pinned file lists)."""
+    ``snapshot`` selects nothing: it stays only so existing
+    ``snapshot=True`` callers keep working, and ``snapshot=False`` (the
+    removed directory-append path) raises.  It is due to be dropped
+    with its last caller.
+
+    compact_every=N rewrites every sink with ``compact_snapshot`` after
+    each N-th batch (a new version; readers keep their pinned file
+    lists).  vacuum_every=N garbage-collects manifests and unreferenced
+    data files after each N-th batch (``vacuum_snapshots``)."""
+    if not snapshot:
+        raise ValueError(
+            "run_stream commits snapshot tables only; the directory-append "
+            "path (snapshot=False) was removed — use pipeline.run_batch for "
+            "a Hive-partitioned directory lake"
+        )
     parsed = read_fdr_stream(spark, input_path, max_files_per_trigger)
+    # writer identity = the checkpoint: the source replays batch ids
+    # per checkpoint, so the idempotence scope must match it exactly
+    app = "stream-" + hashlib.md5(checkpoint.encode()).hexdigest()[:12]
 
-    def _maybe_compact(batch_id: int) -> None:
-        if not compact_every or (batch_id + 1) % compact_every:
-            return
-        import os
-
-        from ..ocsf.schemas import TABLE_KEYS
-        from ..sinks.compact import compact_table
-        from ..sinks.txn import _fs, _jpath
-
-        fs, _ = _fs(spark, base_path)
-        for key in TABLE_KEYS:
-            path = os.path.join(base_path, key)
-            if fs.exists(_jpath(spark, path)):  # table may not exist yet
-                compact_table(spark, path, min_files=compact_min_files)
+    def _due(every: int | None, batch_id: int) -> bool:
+        return bool(every) and (batch_id + 1) % every == 0
 
     def _sink(batch_df, batch_id: int) -> None:
-        process_batch(
-            spark, batch_df, base_path, region=region, account_id=account_id
-        )
-        _maybe_compact(batch_id)
-
-    def _sink_snapshot(batch_df, batch_id: int) -> None:
-        import hashlib
-        import os
-        from concurrent.futures import ThreadPoolExecutor
-
-        from ..operators.router import classify, unmapped_events
-        from ..pipeline import normalized_tables_with_cast_quarantine
-        from ..sinks.parquet import with_partition_cols
-        from ..sinks.snapshot import compact_snapshot, current_version, write_snapshot
-        from ..sources.fdr import corrupt_lines, no_discriminator
-
-        # writer identity = the checkpoint: the source replays batch ids
-        # per checkpoint, so the idempotence scope must match it exactly
-        app = "stream-" + hashlib.md5(checkpoint.encode()).hexdigest()[:12]
-
         batch_df.persist()
         try:
-            classified = classify(batch_df, spark)
-            tables, cast_failures = normalized_tables_with_cast_quarantine(
-                classified
-            )
-            sinks = {
-                key: with_partition_cols(df, region, account_id)
-                for key, df in tables.items()
-            }
-            # quarantines are snapshot tables too: the txn mark makes them
-            # exactly-once on replay, where the txn.py path had to settle
-            # for append-mode diagnostics
-            sinks["_quarantine/cast_failures"] = cast_failures
-            sinks["_quarantine/corrupt_lines"] = corrupt_lines(batch_df)
-            sinks["_quarantine/no_discriminator"] = no_discriminator(
-                batch_df
-            ).drop("raw")
-            sinks["_quarantine/unmapped_events"] = unmapped_events(
-                batch_df, spark
-            )
+            sinks = batch_sinks(spark, batch_df)
+            for key in TABLE_KEYS:
+                sinks[key] = with_partition_cols(sinks[key], region, account_id)
 
             def _write(item):
                 key, df = item
-                write_snapshot(
+                # resolved per call, so a wrapper installed on the module
+                # attribute sees every commit
+                snap.write_snapshot(
                     spark, df, os.path.join(base_path, key),
                     txn_app=app, txn_version=batch_id,
                 )
 
-            # 13 tables + 4 quarantines commit concurrently (the
-            # reference's 13 Firehose streams also ran in parallel);
-            # each table has its own manifest chain, so there is no
-            # cross-table commit contention
+            # 13 tables + 4 quarantines commit 8 at a time (the reference's
+            # 13 Firehose streams also ran in parallel); each table has its
+            # own manifest chain, so there is no cross-table commit contention
             with ThreadPoolExecutor(max_workers=8) as pool:
                 list(pool.map(_write, sinks.items()))
 
-            if compact_every and (batch_id + 1) % compact_every == 0:
-                from ..ocsf.schemas import TABLE_KEYS
-
-                for key in TABLE_KEYS:
-                    path = os.path.join(base_path, key)
-                    if current_version(spark, path) is not None:
-                        compact_snapshot(spark, path)
+            # every sink was just committed (or was already, on a replay),
+            # so each one has a current version to maintain
+            if _due(compact_every, batch_id):
+                for key in sinks:
+                    snap.compact_snapshot(spark, os.path.join(base_path, key))
             # retention: GC manifests + unreferenced data files (compacted-
             # away originals, crash orphans).  Age-guarded, so it is safe
             # next to this very writer's in-flight staging.
-            if vacuum_every and (batch_id + 1) % vacuum_every == 0:
-                from ..ocsf.schemas import TABLE_KEYS
-                from ..sinks.snapshot import vacuum_snapshots
-
-                for key in TABLE_KEYS:
-                    path = os.path.join(base_path, key)
-                    if current_version(spark, path) is not None:
-                        vacuum_snapshots(
-                            spark,
-                            path,
-                            keep_last=vacuum_keep_last,
-                            min_age_seconds=vacuum_min_age_seconds,
-                        )
+            if _due(vacuum_every, batch_id):
+                for key in sinks:
+                    snap.vacuum_snapshots(
+                        spark,
+                        os.path.join(base_path, key),
+                        keep_last=vacuum_keep_last,
+                        min_age_seconds=vacuum_min_age_seconds,
+                    )
         finally:
             batch_df.unpersist()
 
-    def _sink_txn(batch_df, batch_id: int) -> None:
-        from ..operators.router import classify, unmapped_events
-        from ..pipeline import normalized_tables_with_cast_quarantine
-        from ..sinks.txn import commit_batch_exactly_once
-        from ..sources.fdr import corrupt_lines, no_discriminator
-
-        batch_df.persist()
-        try:
-            classified = classify(batch_df, spark)
-            tables, cast_failures = normalized_tables_with_cast_quarantine(
-                classified
-            )
-            # quarantines ride INSIDE the fenced commit: publishing them
-            # after the done marker would lose them if the driver died in
-            # between (the replay would see .done and skip the batch)
-            commit_batch_exactly_once(
-                spark,
-                tables,
-                base_path,
-                batch_id,
-                region=region,
-                account_id=account_id,
-                side_outputs={
-                    "_quarantine/cast_failures": cast_failures,
-                    "_quarantine/corrupt_lines": corrupt_lines(batch_df),
-                    "_quarantine/no_discriminator": no_discriminator(
-                        batch_df
-                    ).drop("raw"),
-                    "_quarantine/unmapped_events": unmapped_events(
-                        batch_df, spark
-                    ),
-                },
-            )
-            _maybe_compact(batch_id)
-        finally:
-            batch_df.unpersist()
-
-    if exactly_once and snapshot:
-        raise ValueError(
-            "exactly_once (txn.py fence) and snapshot (manifest versions) "
-            "are alternative commit protocols — pick one"
-        )
-
-    if compact_every and not snapshot:
-        # repair any compaction interrupted mid-swap in a previous run NOW,
-        # not at the next compact_every-th batch — readers would otherwise
-        # see double-counted partitions until then
-        import os
-
-        from ..ocsf.schemas import TABLE_KEYS
-        from ..sinks.compact import recover_compaction
-        from ..sinks.txn import _fs, _jpath
-
-        fs, _ = _fs(spark, base_path)
-        for key in TABLE_KEYS:
-            path = os.path.join(base_path, key)
-            if fs.exists(_jpath(spark, path)):
-                recover_compaction(spark, path)
-
-    sink_fn = _sink_snapshot if snapshot else (_sink_txn if exactly_once else _sink)
-    writer = parsed.writeStream.foreachBatch(sink_fn).option(
+    writer = parsed.writeStream.foreachBatch(_sink).option(
         "checkpointLocation", checkpoint
     )
     writer = writer.trigger(**(trigger or {"availableNow": True}))

@@ -81,7 +81,7 @@ from ..operators.similarity import (
     _rank1_negatives,
 )
 from ..sinks.snapshot import read_snapshot_pruned, write_snapshot
-from ..sinks.txn import json_meta_io
+from ..sinks.fsutil import json_meta_io
 from .curation import _snapshot_or_none
 
 EMB_SCHEMA = StructType(

@@ -174,7 +174,7 @@ def ocsf_stream_verify(spark: SparkSession, _sf_dir: str) -> DataFrame:
     STREAM (README.md:36-43: S3 object notifications -> micro-batches ->
     13 sinks): the same 20k synthetic FDR fixture events as
     ``ocsf_etl_verify``, but delivered as three NDJSON file drops through
-    ``run_stream(snapshot=True)`` — file-source discovery standing in for
+    ``run_stream`` — file-source discovery standing in for
     EventBridge, maxFilesPerTrigger=1 for the notification batch, each
     micro-batch committing all 13 OCSF tables + 4 quarantines as
     exactly-once snapshot versions — then the snapshot tables read BACK
@@ -217,7 +217,6 @@ def ocsf_stream_verify(spark: SparkSession, _sf_dir: str) -> DataFrame:
             os.path.join(src, "b*"),
             os.path.join(stage, "out"),
             os.path.join(stage, "ckpt"),
-            snapshot=True,
             max_files_per_trigger=1,
         )
         finished = q.awaitTermination(600)
@@ -1688,7 +1687,7 @@ def snapshot_delete_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_files,
         write_snapshot,
     )
-    from ..sinks.txn import _fs
+    from ..sinks.fsutil import _fs
     from ..sources.tables import ensure_runtime_conf
 
     ensure_runtime_conf(spark)

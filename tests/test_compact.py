@@ -1,132 +1,11 @@
-"""Small-file compaction (sinks/compact.py): row preservation, file-count
-reduction, partition selectivity, and crash-recovery via the manifest."""
+"""Snapshot compaction of the streaming maintenance twins
+(streaming/compaction.py): crash-replay fencing, a bounded live file
+count over a long run, and the file-count trigger."""
 
 from __future__ import annotations
 
-import os
-import posixpath
-
 import pytest
 from pyspark.sql import functions as F
-
-from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sinks.compact import (
-    compact_table,
-    recover_compaction,
-)
-from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sinks.txn import (
-    _fs,
-    _jpath,
-    _write_text,
-)
-
-
-def _fragmented_table(spark, path, *, appends=5, rows_per=40):
-    """Simulate micro-batch appends: `appends` writes x 2 eventDay
-    partitions, 2 files per write -> 2*appends files per partition."""
-    for b in range(appends):
-        (
-            spark.range(rows_per)
-            .select(
-                (F.col("id") + b * rows_per).alias("id"),
-                (F.col("id") % 2).cast("string").alias("eventDay"),
-            )
-            .repartition(2)
-            .write.partitionBy("eventDay")
-            .mode("append")
-            .parquet(path)
-        )
-
-
-def _data_files(path):
-    out = []
-    for root, _dirs, files in os.walk(path):
-        # component check: pytest's tmp dir itself contains "_compact"
-        if "_compact" in os.path.relpath(root, path).split(os.sep):
-            continue
-        out += [
-            os.path.join(root, f)
-            for f in files
-            if not f.startswith(("_", "."))
-        ]
-    return out
-
-
-def test_compact_preserves_rows_and_reduces_files(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    _fragmented_table(spark, path)
-    before = spark.read.parquet(path)
-    before_rows = sorted(r.id for r in before.collect())
-    n_before = len(_data_files(path))
-    assert n_before >= 20  # genuinely fragmented
-
-    stats = compact_table(spark, path, min_files=4)
-    assert stats["partitions_compacted"] == 2
-    assert stats["files_before"] == n_before
-    # tiny partitions -> 1 output file each
-    assert len(_data_files(path)) == stats["files_after"] == 2
-
-    after = spark.read.parquet(path)
-    assert sorted(r.id for r in after.collect()) == before_rows
-    assert after.groupBy("eventDay").count().count() == 2
-    # idempotent: nothing left above threshold
-    assert compact_table(spark, path, min_files=4)["partitions_compacted"] == 0
-
-
-def test_compact_skips_small_partitions(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    _fragmented_table(spark, path, appends=1)  # 2 files per partition
-    files = set(_data_files(path))
-    stats = compact_table(spark, path, min_files=4)
-    assert stats["partitions_compacted"] == 0
-    assert set(_data_files(path)) == files  # untouched
-
-
-def test_compact_recovery_replays_manifest(spark, tmp_path):
-    """A manifest left by a crash mid-swap (files staged, nothing moved or
-    deleted yet) must be applied to convergence by the next run."""
-    path = str(tmp_path / "tbl")
-    _fragmented_table(spark, path)
-    before_rows = sorted(r.id for r in spark.read.parquet(path).collect())
-    olds = _data_files(path)
-
-    # stage a replacement for partition eventDay=0 by hand
-    fs, _ = _fs(spark, path)
-    staged = posixpath.join(path, "_compact", "staging", "0")
-    part_dir = posixpath.join(path, "eventDay=0")
-    spark.read.parquet(part_dir).repartition(1).write.mode("overwrite").parquet(staged)
-    staged_file = next(
-        f for f in os.listdir(staged) if f.endswith(".parquet")
-    )
-    lines = [
-        f"MV {posixpath.join(staged, staged_file)}\t"
-        f"{posixpath.join(part_dir, 'cdeadbeef-' + staged_file)}"
-    ]
-    lines += [f"DEL {p}" for p in olds if "/eventDay=0/" in p]
-    _write_text(
-        spark, fs, posixpath.join(path, "_compact", "manifest"), "\n".join(lines)
-    )
-
-    assert recover_compaction(spark, path) is True
-    assert sorted(r.id for r in spark.read.parquet(path).collect()) == before_rows
-    day0 = [f for f in _data_files(path) if "/eventDay=0/" in f]
-    assert len(day0) == 1 and "cdeadbeef-" in day0[0]
-    # second recovery is a no-op (manifest cleared)
-    assert recover_compaction(spark, path) is False
-    assert not fs.exists(_jpath(spark, posixpath.join(path, "_compact")))
-
-
-def test_compact_uri_table_path(spark, tmp_path):
-    """Regression: a scheme-qualified table path (file:, standing in for
-    s3a://hdfs://) must compact correctly — path comparisons and reads go
-    through fully-qualified URIs, not scheme-stripped strings."""
-    local = str(tmp_path / "tbl")
-    _fragmented_table(spark, local)
-    uri = f"file:{local}"
-    before_rows = sorted(r.id for r in spark.read.parquet(uri).collect())
-    stats = compact_table(spark, uri, min_files=4)
-    assert stats["partitions_compacted"] == 2
-    assert len(_data_files(local)) == stats["files_after"] == 2
-    assert sorted(r.id for r in spark.read.parquet(uri).collect()) == before_rows
 
 
 @pytest.mark.slow

@@ -154,20 +154,19 @@ def test_cast_failure_quarantine(spark, tmp_path):
 
 
 def test_txn_commit_replay_idempotent(spark, tmp_path):
-    """Exactly-once sink commit: a replayed batch is a no-op after full
-    commit, and after a simulated MID-publish death (manifest present,
-    files moved, no done marker) the retry un-publishes its own files
-    first — row counts never double."""
-    import glob
+    """Exactly-once stream commit: each of a batch's 17 sinks commits as
+    a snapshot version fenced on (writer, txn_version).  A batch that died
+    after committing only some sinks replays into exactly the missing
+    ones, a replay of a fully committed batch is a no-op on every table,
+    and every input line lands in exactly one sink."""
     import json as _json
-    import os
 
-    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.operators.router import (
-        classify,
-        normalized_tables,
+    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.pipeline import (
+        batch_sinks,
     )
-    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sinks.txn import (
-        commit_batch_exactly_once,
+    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sinks.snapshot import (
+        read_snapshot,
+        write_snapshot,
     )
     from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sources.fdr import (
         parse_fdr_lines,
@@ -180,61 +179,39 @@ def test_txn_commit_replay_idempotent(spark, tmp_path):
     lines = spark.createDataFrame(
         [(_json.dumps(e),) for e in FIXTURES], ["value"]
     ).repartition(1)
-    classified = classify(parse_fdr_lines(lines), spark).persist()
-    tables = normalized_tables(classified)
+    parsed = parse_fdr_lines(lines).persist()
+    try:
+        sinks = batch_sinks(spark, parsed)
+        keys = list(sinks)
+        assert len(keys) == 17
 
-    assert commit_batch_exactly_once(spark, tables, base, 7) is True
-    count1 = spark.read.parquet(f"{base}/process_activity").count()
-    assert count1 > 0
+        def commit(ks):
+            return {
+                k: write_snapshot(
+                    spark, sinks[k], f"{base}/{k}", txn_app="t", txn_version=7
+                )
+                for k in ks
+            }
 
-    # full replay: done marker short-circuits, nothing changes
-    assert commit_batch_exactly_once(spark, tables, base, 7) is False
-    assert spark.read.parquet(f"{base}/process_activity").count() == count1
+        def counts():
+            return {k: read_snapshot(spark, f"{base}/{k}").count() for k in keys}
 
-    # simulated mid-publish death: files are there, manifest restored,
-    # done marker gone -> retry must first delete its own files
-    published = glob.glob(f"{base}/**/b7-*", recursive=True)
-    assert published, "expected b7- prefixed published files"
-    with open(f"{base}/_commits/7.manifest", "w") as f:
-        f.write("\n".join(published))
-    os.remove(f"{base}/_commits/7.done")
-    assert commit_batch_exactly_once(spark, tables, base, 7) is True
-    assert spark.read.parquet(f"{base}/process_activity").count() == count1
-    classified.unpersist()
+        # batch 7 dies after committing the first half of its sinks; the
+        # replay commits exactly the other half
+        done = keys[: len(keys) // 2]
+        assert set(commit(done).values()) == {1}
+        replay = commit(keys)
+        assert all(replay[k] is None for k in done)
+        assert all(replay[k] == 1 for k in keys if k not in done)
+        after = counts()
+        assert after["process_activity"] > 0
+        assert sum(after.values()) == len(FIXTURES)
 
-
-@pytest.mark.slow
-def test_stream_exactly_once_mode(spark, tmp_path):
-    """run_stream(exactly_once=True): normal path lands the same counts
-    as append mode, and a restart with no new input changes nothing."""
-    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.streaming import (
-        run_stream,
-    )
-
-    src = write_fixture_files(str(tmp_path / "raw"))
-    out = str(tmp_path / "ocsf")
-    q = run_stream(
-        spark,
-        src,
-        out,
-        checkpoint=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
-        exactly_once=True,
-    )
-    q.awaitTermination(300)
-    for key, expected in EXPECTED_COUNTS.items():
-        n = spark.read.parquet(f"{out}/{key}").count()
-        assert n == expected, f"{key}: {n} != {expected}"
-    q2 = run_stream(
-        spark,
-        src,
-        out,
-        checkpoint=str(tmp_path / "ckpt"),
-        exactly_once=True,
-    )
-    q2.awaitTermination(120)
-    n = spark.read.parquet(f"{out}/process_activity").count()
-    assert n == EXPECTED_COUNTS["process_activity"]
+        # full replay: the txn mark short-circuits every table
+        assert set(commit(keys).values()) == {None}
+        assert counts() == after
+    finally:
+        parsed.unpersist()
 
 
 def test_corrupt_gzip_file_aborts_and_skips(spark, tmp_path):
@@ -259,56 +236,64 @@ def test_corrupt_gzip_file_aborts_and_skips(spark, tmp_path):
 
 def test_exactly_once_commit_uri_base_path(spark, tmp_path):
     """Regression: with a scheme-qualified base path (file:, standing in
-    for s3a://hdfs://), the staged-file prefix match must still see every
-    staged file — a scheme-stripped comparison would publish NOTHING while
-    still writing the done marker (silent batch loss)."""
-    import json as _json
-
-    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.operators.router import (
-        classify,
-        normalized_tables,
+    for s3a://hdfs://), the stream's snapshot commits must still match
+    every staged file to its table root — a scheme-stripped comparison
+    would reject or drop the batch's files."""
+    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sinks.snapshot import (
+        read_snapshot,
     )
-    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sinks.txn import (
-        commit_batch_exactly_once,
-    )
-    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sources.fdr import (
-        parse_fdr_lines,
-    )
-    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sources.sample import (
-        FIXTURES,
+    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.streaming import (
+        run_stream,
     )
 
+    src = write_fixture_files(str(tmp_path / "raw"))
     base = f"file:{tmp_path}/lake"
-    lines = spark.createDataFrame(
-        [(_json.dumps(e),) for e in FIXTURES], ["value"]
-    ).repartition(1)
-    classified = classify(parse_fdr_lines(lines), spark).persist()
-    try:
-        assert commit_batch_exactly_once(spark, normalized_tables(classified), base, 3)
-        assert spark.read.parquet(f"{base}/process_activity").count() > 0
-    finally:
-        classified.unpersist()
+    q = run_stream(spark, src, base, checkpoint=str(tmp_path / "ckpt"))
+    q.awaitTermination(300)
+    assert q.exception() is None
+    for key, expected in EXPECTED_COUNTS.items():
+        assert read_snapshot(spark, f"{base}/{key}").count() == expected, key
+    assert read_snapshot(spark, f"{base}/_quarantine/corrupt_lines").count() == 1
 
 
 @pytest.mark.slow
-def test_stream_quarantines_ride_the_fenced_commit(spark, tmp_path):
-    """exactly_once mode publishes quarantine side outputs INSIDE the
-    manifest-fenced commit (not as post-marker appends that a replay
-    would skip): the corrupt fixture line lands in _quarantine exactly
-    once, and a no-new-input restart adds nothing."""
+def test_stream_quarantine_lands_once_across_replay(spark, tmp_path):
+    """A batch replayed after its sinks committed but before the
+    checkpoint did (the commit-log entry is dropped) must not re-land
+    anything: the corrupt fixture line stays in _quarantine exactly once
+    and no table gains a version."""
+    import os
+
+    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sinks.snapshot import (
+        current_version,
+        read_snapshot,
+    )
     from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.streaming import (
         run_stream,
     )
 
     src = write_fixture_files(str(tmp_path / "raw"))
     out = str(tmp_path / "ocsf")
-    for _ in range(2):  # second run = replay with no new files
-        q = run_stream(
-            spark,
-            src,
-            out,
-            checkpoint=str(tmp_path / "ckpt"),
-            exactly_once=True,
-        )
-        q.awaitTermination(300)
-        assert spark.read.parquet(f"{out}/_quarantine/corrupt_lines").count() == 1
+    ckpt = str(tmp_path / "ckpt")
+    quarantine = f"{out}/_quarantine/corrupt_lines"
+    q = run_stream(spark, src, out, checkpoint=ckpt)
+    q.awaitTermination(300)
+    assert read_snapshot(spark, quarantine).count() == 1
+    versions = {k: current_version(spark, f"{out}/{k}") for k in EXPECTED_COUNTS}
+    v_quarantine = current_version(spark, quarantine)
+
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for n in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, n)):
+            os.remove(os.path.join(commits, n))
+    q = run_stream(spark, src, out, checkpoint=ckpt)
+    q.awaitTermination(300)
+    assert q.exception() is None
+    # the batch did re-run: its commit-log entry is back
+    assert os.path.exists(os.path.join(commits, str(last)))
+    assert read_snapshot(spark, quarantine).count() == 1
+    assert current_version(spark, quarantine) == v_quarantine
+    for key, expected in EXPECTED_COUNTS.items():
+        assert current_version(spark, f"{out}/{key}") == versions[key], key
+        assert read_snapshot(spark, f"{out}/{key}").count() == expected, key

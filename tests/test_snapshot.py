@@ -19,7 +19,7 @@ from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sinks.snap
     vacuum_snapshots,
     write_snapshot,
 )
-from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sinks.txn import (
+from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sinks.fsutil import (
     _fs,
     _jpath,
     _write_text,
@@ -165,7 +165,7 @@ def test_snapshot_manifest_race_lost_to_marker(spark, tmp_path):
 
 @pytest.mark.slow
 def test_snapshot_soak_stream_with_concurrent_reader(spark, tmp_path):
-    """SOAK: 12 identical micro-batches through run_stream(snapshot=True)
+    """SOAK: 12 identical micro-batches through run_stream
     with inline compaction (every 3) and vacuum (every 4, age 0) while a
     concurrent reader loop hammers read_snapshot on one table.  Invariants:
     (a) every concurrent read sees a COMMITTED version — its count is an
@@ -174,7 +174,8 @@ def test_snapshot_soak_stream_with_concurrent_reader(spark, tmp_path):
     (c) the final count is exactly 12x the per-batch count;
     (d) file counts stay BOUNDED: the live snapshot is compacted and
     vacuum keeps the on-disk data-file population near the live set
-    instead of 12 appends + 4 compaction generations."""
+    instead of 12 appends + 4 compaction generations — for the
+    quarantine tables as well as the 13 OCSF tables."""
     import glob
     import json as _json
     import os
@@ -187,13 +188,13 @@ def test_snapshot_soak_stream_with_concurrent_reader(spark, tmp_path):
         run_stream,
     )
 
-    from .fdr_fixtures import EXPECTED_COUNTS
+    from .fdr_fixtures import CORRUPT_LINE, EXPECTED_COUNTS
 
     import gzip
 
     src = str(tmp_path / "raw")
     os.makedirs(src)
-    payload = "\n".join(_json.dumps(e) for e in FIXTURES) + "\n"
+    payload = "\n".join([*(_json.dumps(e) for e in FIXTURES), CORRUPT_LINE]) + "\n"
     n_batches = 12
     for i in range(n_batches):
         with gzip.open(os.path.join(src, f"fdr_{i:02d}.gz"), "wt") as f:
@@ -221,8 +222,8 @@ def test_snapshot_soak_stream_with_concurrent_reader(spark, tmp_path):
     t.start()
     q = run_stream(
         spark, src, out, checkpoint=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1, snapshot=True,
-        compact_every=3, compact_min_files=2,
+        max_files_per_trigger=1,
+        compact_every=3,
         vacuum_every=4, vacuum_keep_last=2, vacuum_min_age_seconds=0.0,
     )
     q.awaitTermination(600)
@@ -241,6 +242,11 @@ def test_snapshot_soak_stream_with_concurrent_reader(spark, tmp_path):
     # (12 appends would otherwise mean >= 12 live files)
     live = snapshot_files(spark, probe)
     assert len(live) <= 4, len(live)
+    # the quarantines are compacted too: one corrupt line per batch, each
+    # landed once, in a bounded live file set
+    quarantine = f"{out}/_quarantine/corrupt_lines"
+    assert read_snapshot(spark, quarantine).count() == n_batches
+    assert len(snapshot_files(spark, quarantine)) <= 4
     # on-disk population is near the live set (vacuum pruned history;
     # keep_last=2 plus the final compaction generation may linger)
     on_disk = [

@@ -7,6 +7,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sinks.snapshot import (
+    current_version,
+    read_snapshot,
+)
 from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sources.tables import (
     load_table,
 )
@@ -20,6 +24,9 @@ from .fdr_fixtures import EXPECTED_COUNTS, write_fixture_files
 @pytest.mark.slow
 @pytest.mark.parametrize("max_files", [1])
 def test_stream_availablenow(spark, tmp_path, max_files):
+    """availableNow drains the source over several micro-batches and lands
+    every sink's fixture count; a restart on the same checkpoint with no
+    new input commits nothing (every table keeps its version)."""
     src = write_fixture_files(str(tmp_path / "raw"))
     out = str(tmp_path / "ocsf")
     q = run_stream(
@@ -32,15 +39,24 @@ def test_stream_availablenow(spark, tmp_path, max_files):
     q.awaitTermination(300)
     assert not q.isActive
     for key, expected in EXPECTED_COUNTS.items():
-        n = spark.read.parquet(f"{out}/{key}").count()
+        n = read_snapshot(spark, f"{out}/{key}").count()
         assert n == expected, f"{key}: {n} != {expected}"
-    # restart with no new files -> completed batches are not reprocessed.
-    # (At-least-once on a MID-batch failure: the foreachBatch parquet
-    # append is not transactional, same as the reference Firehose path.)
+    versions = {key: current_version(spark, f"{out}/{key}") for key in EXPECTED_COUNTS}
     q2 = run_stream(spark, src, out, checkpoint=str(tmp_path / "ckpt"))
     q2.awaitTermination(120)
-    n = spark.read.parquet(f"{out}/process_activity").count()
-    assert n == EXPECTED_COUNTS["process_activity"]
+    for key, expected in EXPECTED_COUNTS.items():
+        assert current_version(spark, f"{out}/{key}") == versions[key], key
+        assert read_snapshot(spark, f"{out}/{key}").count() == expected, key
+
+
+def test_run_stream_rejects_directory_append(spark, tmp_path):
+    """The directory-append commit path is gone: snapshot=False raises,
+    naming the batch path instead."""
+    with pytest.raises(ValueError, match="run_batch"):
+        run_stream(
+            spark, str(tmp_path / "raw"), str(tmp_path / "ocsf"),
+            str(tmp_path / "ckpt"), snapshot=False,
+        )
 
 
 @pytest.mark.slow
@@ -66,10 +82,8 @@ def test_stream_processing_time_cadence(spark, tmp_path):
         expected = EXPECTED_COUNTS["process_activity"]
         n = -1
         while time.time() < deadline:
-            try:
-                n = spark.read.parquet(f"{out}/process_activity").count()
-            except Exception:
-                n = -1  # first batch not yet committed
+            if current_version(spark, f"{out}/process_activity") is not None:
+                n = read_snapshot(spark, f"{out}/process_activity").count()
             if n == expected and q.lastProgress and q.lastProgress["numInputRows"] == 0:
                 break
             time.sleep(2)
@@ -80,57 +94,12 @@ def test_stream_processing_time_cadence(spark, tmp_path):
         q.stop()
     # the continuous query appended each batch exactly once
     for key, exp in EXPECTED_COUNTS.items():
-        assert spark.read.parquet(f"{out}/{key}").count() == exp, key
-
-
-@pytest.mark.slow
-def test_stream_inline_compaction(spark, tmp_path):
-    """compact_every=N folds the small-file compactor into the stream:
-    after the run, fragmented table partitions are rewritten, counts are
-    unchanged, and no service dirs leak into the table paths."""
-    import os
-
-    import shutil
-
-    src = write_fixture_files(str(tmp_path / "raw"))
-    # duplicate the two fixture objects -> 4 micro-batches, so the same
-    # table partition receives multiple batch file sets
-    for i in range(2):
-        shutil.copy(
-            os.path.join(src, f"fdr_part{i}.gz"),
-            os.path.join(src, f"fdr_part{i + 2}.gz"),
-        )
-    out = str(tmp_path / "ocsf")
-    q = run_stream(
-        spark,
-        src,
-        out,
-        checkpoint=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,  # one batch per file -> fragmentation
-        exactly_once=True,
-        compact_every=4,
-        compact_min_files=2,
-    )
-    q.awaitTermination(300)
-    assert not q.isActive
-    for key, expected in ((k, 2 * v) for k, v in EXPECTED_COUNTS.items()):
-        n = spark.read.parquet(f"{out}/{key}").count()
-        assert n == expected, f"{key}: {n} != {expected}"
-        assert not os.path.exists(f"{out}/{key}/_compact"), key
-    # at least one multi-batch table got compacted down to c*-named files
-    compacted = [
-        f
-        for key in EXPECTED_COUNTS
-        for _root, _d, files in os.walk(f"{out}/{key}")
-        for f in files
-        if f.startswith("c") and f.endswith(".parquet")
-    ]
-    assert compacted, "no partition was rewritten by the inline compactor"
+        assert read_snapshot(spark, f"{out}/{key}").count() == exp, key
 
 
 @pytest.mark.slow
 def test_stream_snapshot_mode(spark, tmp_path):
-    """run_stream(snapshot=True): every micro-batch commits each table as
+    """run_stream: every micro-batch commits each table as
     a manifest version — readers plan from snapshots (no directory
     listing), a restart with the same checkpoint reprocesses nothing,
     inline compaction produces a new version with NO maintenance window,
@@ -141,8 +110,6 @@ def test_stream_snapshot_mode(spark, tmp_path):
 
     from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sinks.snapshot import (
         compact_snapshot,
-        current_version,
-        read_snapshot,
         snapshot_files,
     )
 
@@ -156,7 +123,7 @@ def test_stream_snapshot_mode(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     q = run_stream(
         spark, src, out, checkpoint=ckpt,
-        max_files_per_trigger=1, snapshot=True,
+        max_files_per_trigger=1,
         compact_every=4, vacuum_every=4, vacuum_min_age_seconds=0.0,
     )
     q.awaitTermination(300)
@@ -188,10 +155,7 @@ def test_stream_snapshot_mode(spark, tmp_path):
     pinned_n = pinned.count()
     v_before = current_version(spark, probe)
 
-    q2 = run_stream(
-        spark, src, out, checkpoint=ckpt,
-        max_files_per_trigger=1, snapshot=True,
-    )
+    q2 = run_stream(spark, src, out, checkpoint=ckpt, max_files_per_trigger=1)
     q2.awaitTermination(120)
     assert current_version(spark, probe) == v_before  # nothing replayed
 
@@ -533,7 +497,7 @@ def test_streaming_ewma_restart_resumes_state(spark, tmp_path):
     q1 = run_ewma_monitor(spark, src, ckpt, output_path=out_pq)
     q1.awaitTermination(300)
     q1.stop()
-    first = spark.read.parquet(out_pq).collect()
+    first = read_snapshot(spark, out_pq).collect()
     assert len(first) == 20
 
     _time.sleep(0.05)
@@ -544,8 +508,25 @@ def test_streaming_ewma_restart_resumes_state(spark, tmp_path):
     q2 = run_ewma_monitor(spark, src, ckpt, output_path=out_pq)
     q2.awaitTermination(300)
     q2.stop()
-    allrows = spark.read.parquet(out_pq).collect()
+    allrows = read_snapshot(spark, out_pq).collect()
     assert len(allrows) == 32  # run 2 appended ONLY the 12 new slots
+
+    # crash after the sink committed but before the checkpoint did: drop
+    # the last commit-log entry, so the next run replays that batch id —
+    # the txn mark makes the replayed write a no-op
+    commits = _os.path.join(ckpt, "commits")
+    last = max(int(n) for n in _os.listdir(commits) if n.isdigit())
+    for n in (str(last), f".{last}.crc"):
+        if _os.path.exists(_os.path.join(commits, n)):
+            _os.remove(_os.path.join(commits, n))
+    v_before = current_version(spark, out_pq)
+    q3 = run_ewma_monitor(spark, src, ckpt, output_path=out_pq)
+    q3.awaitTermination(300)
+    q3.stop()
+    assert q3.exception() is None
+    assert _os.path.exists(_os.path.join(commits, str(last)))  # it re-ran
+    assert current_version(spark, out_pq) == v_before
+    assert read_snapshot(spark, out_pq).count() == 32
 
     spark.createDataFrame(
         [(mk(s)["event_id"], dt.datetime.fromisoformat(mk(s)["ts"]), 1, "cpu", mk(s)["value"], "{}") for s in range(32)],
@@ -588,39 +569,48 @@ def test_ewma_round4_matches_spark_half_up(spark):
     assert _round4(0.28125) == 0.2813  # the half-even trap explicitly
 
 
-def test_ewma_sink_replay_is_idempotent(spark, tmp_path):
-    """A micro-batch replayed after a crash (same batch id) must not
-    double-append: the foreachBatch sink fences on the batch id via the
-    manifest protocol.  Also covers the died-mid-publish path (manifest
-    exists, .done does not -> un-publish then re-publish)."""
-    import os as _os
+def test_ewma_sink_replay_is_idempotent(spark, tmp_path, monkeypatch):
+    """The EWMA monitor's foreachBatch sink is ``write_snapshot`` fenced
+    on (checkpoint-keyed ``txn_app``, batch id): a micro-batch replayed
+    after a crash (same batch id) is a no-op, and a write that died after
+    staging its files but before the manifest commit stays invisible to
+    readers and is committed exactly once by its replay."""
+    import glob
 
-    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sinks.txn import (
-        append_batch_exactly_once,
+    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sinks import (
+        snapshot as snap,
     )
 
     out = str(tmp_path / "out")
     df = spark.range(10).selectExpr("id", "id * 2 AS v")
-    assert append_batch_exactly_once(df, out, 0) is True
-    # clean replay of a committed batch: no-op
-    assert append_batch_exactly_once(df, out, 0) is False
-    assert spark.read.parquet(out).count() == 10
 
-    # batch 1 died mid-publish: files landed, manifest present, no .done
-    assert append_batch_exactly_once(df, out, 1) is True
-    _os.remove(_os.path.join(out, "_commits", "1.done"))
-    with open(_os.path.join(out, "_commits", "1.manifest"), "w") as f:
-        f.write(
-            "\n".join(
-                _os.path.join(out, n)
-                for n in _os.listdir(out)
-                if n.startswith("b1-")
-            )
+    def sink(batch_id):
+        return snap.write_snapshot(
+            spark, df, out, txn_app="ewma-test", txn_version=batch_id
         )
-    assert append_batch_exactly_once(df, out, 1) is True  # replay re-publishes
-    assert spark.read.parquet(out).count() == 20
-    assert append_batch_exactly_once(df, out, 2) is True
-    assert spark.read.parquet(out).count() == 30
+
+    assert sink(0) == 1
+    assert sink(0) is None  # clean replay of a committed batch: no-op
+    assert read_snapshot(spark, out).count() == 10
+
+    # batch 1 dies between staging its files and the manifest commit
+    def dying_commit(*a, **kw):
+        raise RuntimeError("simulated crash before the manifest commit")
+
+    monkeypatch.setattr(snap, "_commit", dying_commit)
+    with pytest.raises(RuntimeError):
+        sink(1)
+    monkeypatch.undo()
+    on_disk = glob.glob(f"{out}/data/*/*.parquet")
+    assert len(on_disk) > len(snap.snapshot_files(spark, out))  # staged orphans
+    assert current_version(spark, out) == 1
+    assert read_snapshot(spark, out).count() == 10  # ... and invisible
+
+    assert sink(1) == 2  # the replay commits
+    assert sink(1) is None
+    assert read_snapshot(spark, out).count() == 20
+    assert sink(2) == 3
+    assert read_snapshot(spark, out).count() == 30
 
 
 def test_upsert_stream_replay_fenced_last_writer_wins(spark, tmp_path):

@@ -51,7 +51,7 @@ def main() -> None:
         snapshot_files,
         write_snapshot,
     )
-    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sinks.txn import (
+    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sinks.fsutil import (
         _fs,
     )
 
