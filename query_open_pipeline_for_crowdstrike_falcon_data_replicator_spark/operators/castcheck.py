@@ -27,9 +27,14 @@ silently nulling.
 from __future__ import annotations
 
 import re
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..ocsf.schemas import TABLE_KEYS
+from .normalize import class_columns
+from .router import class_filter
 
 # cast targets that can NULL a non-empty string; AS STRING etc. cannot
 _LOSSY = re.compile(
@@ -40,6 +45,8 @@ _RAW_KEY = re.compile(r"raw\['([^']+)'\]")
 
 # per-class scan results; expressions are pure so the scan is too
 _SCAN_CACHE: dict[str, list[tuple[str, str]]] = {}
+# split_cast_failures' CASE column, pure for the same reason
+_BAD_FIELDS: list[Column] = []
 
 
 # A cast site counts as DIRECT only when its input expression IS the raw
@@ -164,22 +171,18 @@ def cast_failure_columns(
     return F.size(bad) > 0, bad
 
 
-def split_cast_failures(
-    df: DataFrame, table_key: str
-) -> tuple[DataFrame, DataFrame]:
-    """Split one classified class into (typed rows, cast-failure rows).
-
-    Failure rows carry (sink, bad_fields, value) — the raw line lands in
-    the quarantine like the reference's ``failures/`` objects, instead of
-    a typed row with silently nulled fields."""
-    from .normalize import class_columns, normalize_class
-
-    pairs = lossy_raw_casts(table_key, class_columns(table_key, df))
-    flag, bad = cast_failure_columns(pairs)
-    ok = normalize_class(df.filter(~flag), table_key)
-    failures = df.filter(flag).select(
-        F.lit(table_key).alias("sink"),
-        bad.alias("bad_fields"),
-        F.col("value").alias("value"),
-    )
-    return ok, failures
+def split_cast_failures(classified: DataFrame) -> DataFrame:
+    """Add ``bad_fields``: the raw keys whose lossy cast in the row's own
+    class would NULL a present value (empty if none; NULL without a sink).
+    Its ``CASE`` over ``sink`` is built once per process, the first time
+    with the 13 normalizer column lists made on 13 threads: py4j round
+    trips, and pinned-thread py4j gives each Python thread a JVM thread."""
+    if not _BAD_FIELDS:
+        with ThreadPoolExecutor(max_workers=len(TABLE_KEYS)) as pool:
+            sites = pool.map(lambda k: lossy_raw_casts(k, class_columns(k, classified)), TABLE_KEYS)
+        cases = [(class_filter(k), cast_failure_columns(p)[1]) for k, p in zip(TABLE_KEYS, sites)]
+        bad = F.when(*cases[0])
+        for case in cases[1:]:
+            bad = bad.when(*case)
+        _BAD_FIELDS.append(bad)
+    return classified.withColumn("bad_fields", _BAD_FIELDS[0])

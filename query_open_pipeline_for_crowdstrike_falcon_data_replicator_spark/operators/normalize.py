@@ -6,7 +6,7 @@ Each function takes a DataFrame with columns
                   normalizer for its AuditKeyValues array),
 - ``raw``         the line parsed as map<string,string>,
 - ``event_name``  discriminator (P1 coalesce),
-- the joined 122-row mapping columns (R1 broadcast join):
+- the 122-row mapping columns (R1 lookup, ``router.classify``):
   category_uid/category_name/class_uid/class_name/severity_id/severity/
   activity_id/activity_name/status_id/status
 

@@ -8,48 +8,66 @@ SURVEY.md §3.1)."""
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from .operators.castcheck import split_cast_failures
-from .operators.router import class_filter, classify, unmapped_events
 from .ocsf.schemas import TABLE_KEYS
+from .operators.castcheck import split_cast_failures
+from .operators.normalize import normalize_class
+from .operators.router import class_filter, classify, unmapped_events
 from .sinks.parquet import write_ocsf_tables
 from .sources.fdr import corrupt_lines, no_discriminator, parse_fdr_lines, read_fdr
+
+
+def _class_sinks(checked: DataFrame) -> tuple[dict[str, DataFrame], DataFrame]:
+    """The 13 tables (analysed on 13 threads) and the cast-failure
+    quarantine, as filters of one ``split_cast_failures`` frame."""
+
+    def table(key: str) -> DataFrame:
+        # class first: on an unpersisted frame bad_fields is computed in
+        # each table's filter, so only for that class's rows
+        return normalize_class(checked.filter(class_filter(key) & (F.size("bad_fields") == 0)), key)
+
+    with ThreadPoolExecutor(max_workers=len(TABLE_KEYS)) as pool:
+        tables = dict(zip(TABLE_KEYS, pool.map(table, TABLE_KEYS)))
+    return tables, checked.filter(F.size("bad_fields") > 0).select("sink", "bad_fields", "value")
 
 
 def normalized_tables_with_cast_quarantine(
     classified: DataFrame,
 ) -> tuple[dict[str, DataFrame], DataFrame]:
-    """R3 routing with the E5 side output: per class, rows whose typed
-    cast would silently null a present raw value are DIVERTED to a
-    (sink, bad_fields, value) quarantine frame instead of landing in the
-    table with nulled fields — the reference Firehose's ``failures/``
-    semantics (create_qopcfdr_firehoses.py:137)."""
-    tables: dict[str, DataFrame] = {}
-    failures: DataFrame | None = None
-    for key in TABLE_KEYS:
-        ok, bad = split_cast_failures(classified.filter(class_filter(key)), key)
-        tables[key] = ok
-        failures = bad if failures is None else failures.unionByName(bad)
-    return tables, failures
+    """R3 routing with the E5 side output: rows whose typed cast would
+    silently null a present raw value are DIVERTED to a (sink, bad_fields,
+    value) frame, the reference Firehose's ``failures/`` semantics
+    (create_qopcfdr_firehoses.py:137)."""
+    return _class_sinks(split_cast_failures(classified))
 
 
-def batch_sinks(spark: SparkSession, parsed: DataFrame) -> dict[str, DataFrame]:
+@contextmanager
+def batch_sinks(spark: SparkSession, parsed: DataFrame) -> Iterator[dict[str, DataFrame]]:
     """Every sink of one parsed batch, keyed by its path under the lake
     root: the 13 normalized tables (``TABLE_KEYS`` order, no partition
     columns yet) followed by the 4 ``_quarantine/*`` frames.  Batch and
-    stream both build their writes from this one dict."""
-    tables, cast_failures = normalized_tables_with_cast_quarantine(
-        classify(parsed, spark)
-    )
-    return {
-        **tables,
-        "_quarantine/cast_failures": cast_failures,
-        "_quarantine/corrupt_lines": corrupt_lines(parsed),
-        "_quarantine/no_discriminator": no_discriminator(parsed).drop("raw"),
-        "_quarantine/unmapped_events": unmapped_events(parsed, spark),
-    }
+    stream both build their writes from this one dict.
+
+    The batch is classified and cast-checked once, into one persisted
+    frame that all 17 sinks filter, released when the block exits."""
+    routed = split_cast_failures(classify(parsed, spark)).persist()
+    try:
+        tables, cast_failures = _class_sinks(routed)
+        yield {
+            **tables,
+            "_quarantine/cast_failures": cast_failures,
+            "_quarantine/corrupt_lines": corrupt_lines(routed),
+            "_quarantine/no_discriminator": no_discriminator(routed).drop("raw"),
+            "_quarantine/unmapped_events": unmapped_events(routed),
+        }
+    finally:
+        routed.unpersist()
 
 
 def process_batch(
@@ -63,11 +81,10 @@ def process_batch(
 ) -> None:
     """Route one parsed batch to the 13 sinks + quarantine tables.
 
-    The parsed batch is cached: it is scanned 13 times (once per sink
-    filter), and re-reading + re-parsing gzip JSON would dominate."""
-    parsed.persist()
-    try:
-        sinks = batch_sinks(spark, parsed)
+    The 13 concurrent table writes fill ``batch_sinks``' persisted frame,
+    so read, gunzip, parse, classify and cast check run once; the
+    quarantine writes then read it from the cache."""
+    with batch_sinks(spark, parsed) as sinks:
         write_ocsf_tables(
             {key: sinks.pop(key) for key in TABLE_KEYS},
             base_path,
@@ -77,8 +94,6 @@ def process_batch(
         )
         for key, df in sinks.items():  # the 4 quarantines
             df.write.mode(mode).parquet(os.path.join(base_path, key))
-    finally:
-        parsed.unpersist()
 
 
 def run_batch(

@@ -38,8 +38,8 @@ def ocsf_pipeline_envelopes(spark: SparkSession, _sf_dir: str) -> DataFrame:
     lines = spark.createDataFrame(
         [(l,) for l in _fixture_lines()], ["value"]
     ).repartition(1)
-    # persist: the 13-way union would otherwise re-run parse+classify
-    # (including the repartition exchange) once per class branch
+    # persist: uncached, each of the 13 union branches would re-run parse
+    # + the classify lookup (including the repartition exchange)
     classified = classify(parse_fdr_lines(lines), spark).persist()
     out = None
     for _key, df in normalized_tables(classified).items():

@@ -38,8 +38,6 @@ def write_ocsf_tables(
     region: str = "us-east-1",
     account_id: str = "000000000000",
     mode: str = "append",
-    max_records_per_file: int = 5_000_000,
-    concurrency: int = 13,
 ) -> None:
     """13 partitioned GZIP-parquet writes, submitted CONCURRENTLY from
     driver threads (the reference's 13 Firehose streams also ran in
@@ -61,12 +59,12 @@ def write_ocsf_tables(
             with_partition_cols(df, region, account_id)
             .write.partitionBy(*PARTITION_COLS)
             .option("compression", "gzip")
-            .option("maxRecordsPerFile", max_records_per_file)
+            .option("maxRecordsPerFile", 5_000_000)
             .mode(mode)
             .parquet(os.path.join(base_path, key))
         )
 
-    with ThreadPoolExecutor(max_workers=max(concurrency, 1)) as pool:
+    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
         list(pool.map(_write, tables.items()))
 
 

@@ -81,14 +81,11 @@ def run_stream(
         return bool(every) and (batch_id + 1) % every == 0
 
     def _sink(batch_df, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            sinks = batch_sinks(spark, batch_df)
-            for key in TABLE_KEYS:
-                sinks[key] = with_partition_cols(sinks[key], region, account_id)
-
+        with batch_sinks(spark, batch_df) as sinks:
             def _write(item):
                 key, df = item
+                if key in TABLE_KEYS:
+                    df = with_partition_cols(df, region, account_id)
                 # resolved per call, so a wrapper installed on the module
                 # attribute sees every commit
                 snap.write_snapshot(
@@ -102,24 +99,22 @@ def run_stream(
             with ThreadPoolExecutor(max_workers=8) as pool:
                 list(pool.map(_write, sinks.items()))
 
-            # every sink was just committed (or was already, on a replay),
-            # so each one has a current version to maintain
-            if _due(compact_every, batch_id):
-                for key in sinks:
-                    snap.compact_snapshot(spark, os.path.join(base_path, key))
-            # retention: GC manifests + unreferenced data files (compacted-
-            # away originals, crash orphans).  Age-guarded, so it is safe
-            # next to this very writer's in-flight staging.
-            if _due(vacuum_every, batch_id):
-                for key in sinks:
-                    snap.vacuum_snapshots(
-                        spark,
-                        os.path.join(base_path, key),
-                        keep_last=vacuum_keep_last,
-                        min_age_seconds=vacuum_min_age_seconds,
-                    )
-        finally:
-            batch_df.unpersist()
+        # every sink was just committed (or was already, on a replay),
+        # so each one has a current version to maintain
+        if _due(compact_every, batch_id):
+            for key in sinks:
+                snap.compact_snapshot(spark, os.path.join(base_path, key))
+        # retention: GC manifests + unreferenced data files (compacted-
+        # away originals, crash orphans).  Age-guarded, so it is safe
+        # next to this very writer's in-flight staging.
+        if _due(vacuum_every, batch_id):
+            for key in sinks:
+                snap.vacuum_snapshots(
+                    spark,
+                    os.path.join(base_path, key),
+                    keep_last=vacuum_keep_last,
+                    min_age_seconds=vacuum_min_age_seconds,
+                )
 
     writer = parsed.writeStream.foreachBatch(_sink).option(
         "checkpointLocation", checkpoint

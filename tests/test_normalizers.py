@@ -286,5 +286,5 @@ def test_side_channels(spark, tables):
     parsed = tables["_parsed"]
     assert parsed.filter("raw IS NULL").count() == 1  # corrupt line
     assert no_discriminator(parsed).count() == 1
-    um = unmapped_events(parsed, spark).collect()
+    um = unmapped_events(classify(parsed, spark)).collect()
     assert [r.event_name for r in um] == ["SomeFutureEvent"]

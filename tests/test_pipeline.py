@@ -179,9 +179,7 @@ def test_txn_commit_replay_idempotent(spark, tmp_path):
     lines = spark.createDataFrame(
         [(_json.dumps(e),) for e in FIXTURES], ["value"]
     ).repartition(1)
-    parsed = parse_fdr_lines(lines).persist()
-    try:
-        sinks = batch_sinks(spark, parsed)
+    with batch_sinks(spark, parse_fdr_lines(lines)) as sinks:
         keys = list(sinks)
         assert len(keys) == 17
 
@@ -210,8 +208,123 @@ def test_txn_commit_replay_idempotent(spark, tmp_path):
         # full replay: the txn mark short-circuits every table
         assert set(commit(keys).values()) == {None}
         assert counts() == after
-    finally:
-        parsed.unpersist()
+
+
+def _fixture_batch(spark, extra=()):
+    """The sample fixtures (plus ``extra`` events) as one parsed batch."""
+    import json as _json
+
+    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sources.fdr import (
+        parse_fdr_lines,
+    )
+    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sources.sample import (
+        FIXTURES,
+    )
+
+    lines = [(_json.dumps(e),) for e in (*FIXTURES, *extra)]
+    return parse_fdr_lines(spark.createDataFrame(lines, ["value"]).repartition(1))
+
+
+def _plan_nodes(plan) -> list:
+    """Every node of a JVM logical plan tree."""
+    nodes, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        nodes.append(node)
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return nodes
+
+
+def test_batch_sinks_read_one_persisted_frame_without_join(spark):
+    """All 17 sinks of a batch are filters and projections of the one
+    persisted routed frame: each optimized plan's only leaves are the
+    same InMemoryRelation, and no plan joins."""
+    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.pipeline import (
+        batch_sinks,
+    )
+
+    identity = spark.sparkContext._jvm.java.lang.System.identityHashCode
+    with batch_sinks(spark, _fixture_batch(spark)) as sinks:
+        assert len(sinks) == 17
+        caches = set()
+        for key, df in sinks.items():
+            nodes = _plan_nodes(df._jdf.queryExecution().optimizedPlan())
+            names = [n.getClass().getSimpleName() for n in nodes]
+            assert not [n for n in names if "Join" in n], (key, names)
+            leaves = [n for n in nodes if n.children().size() == 0]
+            assert {n.getClass().getSimpleName() for n in leaves} == {"InMemoryRelation"}, (
+                key, names)
+            caches |= {identity(n.cacheBuilder()) for n in leaves}
+        assert len(caches) == 1
+
+
+def test_cast_quarantine_wrapper_matches_batch_sinks(spark):
+    """``normalized_tables_with_cast_quarantine(classify(...))`` yields the
+    same 13 tables and cast failures as ``batch_sinks``."""
+    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.operators.router import (
+        classify,
+    )
+    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.pipeline import (
+        batch_sinks,
+        normalized_tables_with_cast_quarantine,
+    )
+    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sources.sample import (
+        FIXTURES,
+    )
+
+    net = next(e for e in FIXTURES if e.get("event_simpleName") == "NetworkConnectIP4")
+    parsed = _fixture_batch(spark, [dict(net, RemotePort="80x"), dict(net, timestamp="x")])
+
+    def rows(df):
+        return sorted(map(repr, df.collect()))
+
+    tables, failures = normalized_tables_with_cast_quarantine(classify(parsed, spark))
+    with batch_sinks(spark, parsed) as sinks:
+        for key in TABLE_KEYS:
+            assert rows(tables[key]) == rows(sinks[key]), key
+        got = rows(failures)
+        assert len(got) == 2 and got == rows(sinks["_quarantine/cast_failures"])
+
+
+def test_batch_frame_released_after_every_batch(spark, tmp_path, monkeypatch):
+    """The persisted per-batch frame never outlives its batch: not after
+    ``run_batch``, not after a streamed micro-batch, and not after a
+    micro-batch whose sink write raises."""
+    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sinks import (
+        snapshot as snap,
+    )
+    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.streaming import (
+        run_stream,
+    )
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())  # other tests' caches
+
+    def leaked() -> set:
+        return set(jsc.getPersistentRDDs().keySet()) - before
+
+    src = write_fixture_files(str(tmp_path / "raw"))
+    run_batch(spark, src, str(tmp_path / "lake"))
+    assert not leaked()
+
+    q = run_stream(spark, src, str(tmp_path / "s1"), checkpoint=str(tmp_path / "ck1"))
+    q.awaitTermination(300)
+    assert q.exception() is None
+    assert not leaked()
+
+    write = snap.write_snapshot
+
+    def failing_write(spark_, df, path, **kw):
+        if path.endswith("unmapped_events"):
+            raise RuntimeError("injected sink failure")
+        return write(spark_, df, path, **kw)
+
+    monkeypatch.setattr(snap, "write_snapshot", failing_write)
+    q = run_stream(spark, src, str(tmp_path / "s2"), checkpoint=str(tmp_path / "ck2"))
+    with pytest.raises(Exception, match="injected sink failure"):
+        q.awaitTermination(300)
+    assert not leaked()
 
 
 def test_corrupt_gzip_file_aborts_and_skips(spark, tmp_path):
