@@ -12,6 +12,8 @@ whole-stage-codegen projection.
 
 from __future__ import annotations
 
+from functools import cached_property
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -44,25 +46,55 @@ def truthy(c: Column) -> Column:
 
 
 def nonempty(c: Column) -> Column:
-    """Value with Python-falsiness semantics: '' -> NULL (SURVEY.md X11)."""
-    return F.when(truthy(c), c)
+    """Value with Python-falsiness semantics: '' -> NULL (SURVEY.md X11).
+    NULL != '' is NULL, so NULL stays NULL; one comparison keeps the
+    expression small where castcheck repeats it inside a CASE branch."""
+    return F.when(c != "", c)
+
+
+# one typed conversion of a class: (label, present value, typed value)
+CastSite = tuple[str, Column, Column]
 
 
 class Common:
-    """The common FDR fields, read once from the raw string map."""
+    """The common FDR fields, read once from the raw string map, and the
+    record (``casts``) of every conversion the class's projection makes
+    from an input string to a number or a timestamp."""
 
     def __init__(self, raw: Column | None = None):
         self.raw = F.col("raw") if raw is None else raw
+        self.casts: list[CastSite] = []
         r = self.raw
         self.message = r["name"]
         self.aid = r["aid"]
         self.cid = r["cid"]
         self.aip = r["aip"]
         self.uid = r["id"]
-        self.time = fdr_timestamp(F.coalesce(r["timestamp"], F.lit(TIMESTAMP_SENTINEL)))
         self.config_build = r["ConfigBuild"]
         self.platform = r["event_platform"]
         self.os_type_id, self.os_type = platform_os(self.platform)
+
+    @cached_property
+    def time(self) -> Column:
+        """Event time; a missing or empty ``timestamp`` is the 1998 sentinel.
+        Built on first use, so a class that never emits it records no site."""
+        return self.typed("timestamp", "timestamp", default=TIMESTAMP_SENTINEL)
+
+    def typed(self, label: str, to: str, value: Column | None = None,
+              default: str | None = None) -> Column:
+        """The only place an input string becomes a number (``to`` a Spark
+        type name) or a timestamp (``to="timestamp"``, ``fdr_timestamp``).
+
+        ``value`` is ``raw[label]`` unless given (an AuditKeyValues value);
+        '' counts as absent (X11), and an absent value becomes ``default``
+        when one is given.  A present value that does not convert gives
+        NULL under either ANSI setting, never an exception, and the site is
+        recorded so that castcheck diverts exactly those rows."""
+        present = nonempty(self.raw[label] if value is None else value)
+        source = present if default is None else F.coalesce(present, F.lit(default))
+        out = fdr_timestamp(source) if to == "timestamp" else source.try_cast(to)
+        self.casts.append((label, present, out))
+        return out
 
     def os_struct(self) -> Column:
         return F.struct(

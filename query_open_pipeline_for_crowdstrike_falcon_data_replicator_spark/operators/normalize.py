@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from ..functions.builders import (
+    CastSite,
     Common,
     consumed_keys,
     envelope_cols,
@@ -48,19 +49,19 @@ from ..functions.decodes import (
     UPDATE_FLAG,
     decode,
 )
-from ..functions.timeparse import fdr_timestamp
 from ..ocsf.schemas import OCSF_SCHEMAS
 
 
 # Normalizer column lists are pure unresolved expressions (no normalizer
 # touches its input df except through the final select), so building them —
 # thousands of py4j Column constructions, ~1s per class — need happen only
-# once per process.  _finish populates the cache; normalize_class reuses it.
-_COLS_CACHE: dict[str, list[Column]] = {}
+# once per process.  _finish populates the cache with the columns and the
+# class's cast record (Common.casts); normalize_class reuses it.
+_COLS_CACHE: dict[str, tuple[list[Column], list[CastSite]]] = {}
 
 
-def _finish(df: DataFrame, cols: list[Column], table_key: str) -> DataFrame:
-    _COLS_CACHE[table_key] = cols
+def _finish(df: DataFrame, c: Common, cols: list[Column], table_key: str) -> DataFrame:
+    _COLS_CACHE[table_key] = (cols, c.casts)
     schema = OCSF_SCHEMAS[table_key][2]
     return df.select(*cols).to(schema)
 
@@ -80,7 +81,7 @@ def normalize_device_config_state(df: DataFrame) -> DataFrame:
         c.device_struct().alias("device"),
         residual_unmapped(c.raw, consumed_keys([])).alias("unmapped"),
     ]
-    return _finish(df, cols, "device_config_state")
+    return _finish(df, c, cols, "device_config_state")
 
 
 # --------------------------------------------------------------------- #
@@ -136,7 +137,7 @@ def normalize_process_activity(df: DataFrame) -> DataFrame:
     process = F.struct(
         cmd.alias("cmd_line"),
         c.time.alias("created_time"),
-        raw_pid.cast("long").alias("pid"),
+        c.typed("RawProcessId", "long").alias("pid"),
         proc_uid.alias("uid"),
         F.struct(image.alias("name"), hashes.alias("hashes")).alias("file"),
         F.struct(
@@ -153,7 +154,7 @@ def normalize_process_activity(df: DataFrame) -> DataFrame:
         process.alias("process"),
         residual_unmapped(c.raw, consumed).alias("unmapped"),
     ]
-    return _finish(df, cols, "process_activity")
+    return _finish(df, c, cols, "process_activity")
 
 
 # --------------------------------------------------------------------- #
@@ -162,8 +163,8 @@ def normalize_process_activity(df: DataFrame) -> DataFrame:
 def normalize_network_activity(df: DataFrame) -> DataFrame:
     c = Common()
     r = c.raw
-    src_port = nonempty(r["LocalPort"]).cast("long")
-    dst_port = nonempty(r["RemotePort"]).cast("long")
+    src_port = c.typed("LocalPort", "long")
+    dst_port = c.typed("RemotePort", "long")
     dst_ip4 = nonempty(r["RemoteAddressIP4"])
     dst_ip6 = nonempty(r["RemoteAddressIP6"])
     dst_ip = F.coalesce(dst_ip4, dst_ip6)
@@ -232,7 +233,7 @@ def normalize_network_activity(df: DataFrame) -> DataFrame:
         F.struct(dst_ip.alias("ip"), dst_port.alias("port")).alias("dst_endpoint"),
         residual_unmapped(c.raw, consumed).alias("unmapped"),
     ]
-    return _finish(df, cols, "network_activity")
+    return _finish(df, c, cols, "network_activity")
 
 
 # --------------------------------------------------------------------- #
@@ -274,8 +275,8 @@ def normalize_http_activity(df: DataFrame) -> DataFrame:
     dst_ip4 = nonempty(r["RemoteAddressIP4"])
     dst_ip6 = nonempty(r["RemoteAddressIP6"])
     dst_ip = F.coalesce(dst_ip4, dst_ip6)
-    dst_port = nonempty(r["RemotePort"]).cast("long")
-    src_port = nonempty(r["LocalPort"]).cast("long")
+    dst_port = c.typed("RemotePort", "long")
+    src_port = c.typed("LocalPort", "long")
     file_name = nonempty(r["ImageFileName"])
     cmd = nonempty(r["CommandLine"])
     ja3 = nonempty(r["Ja3Hash"])
@@ -365,7 +366,7 @@ def normalize_http_activity(df: DataFrame) -> DataFrame:
         tls.alias("tls"),
         residual_unmapped(c.raw, consumed).alias("unmapped"),
     ]
-    return _finish(df, cols, "http_activity")
+    return _finish(df, c, cols, "http_activity")
 
 
 # --------------------------------------------------------------------- #
@@ -411,7 +412,7 @@ def normalize_http_activity_extapi(df: DataFrame) -> DataFrame:
     )
     http_method = method_raw
 
-    status_code = kv("status_code").cast("long")
+    status_code = c.typed("AuditKeyValues.status_code", "long", kv("status_code"))
     status_str = status_code.cast("string")
     ok = (
         status_str.startswith("1") | status_str.startswith("2") | status_str.startswith("3")
@@ -429,7 +430,7 @@ def normalize_http_activity_extapi(df: DataFrame) -> DataFrame:
     )
 
     user_agent = kv("user_agent")
-    length = kv("request_uri_length").cast("long")
+    length = c.typed("AuditKeyValues.request_uri_length", "long", kv("request_uri_length"))
     trace_id = kv("trace_id")
     request_path = kv("request_path")
     accept_header = kv("request_accept")
@@ -461,7 +462,7 @@ def normalize_http_activity_extapi(df: DataFrame) -> DataFrame:
         activity_name=activity_name,
         status_id=status_id,
         status=status,
-        time=fdr_timestamp(r["UTCTimestamp"]),
+        time=c.typed("UTCTimestamp", "timestamp"),
         message=r["ExternalApiType"],
         metadata_uid=trace_id,
     )
@@ -508,7 +509,7 @@ def normalize_http_activity_extapi(df: DataFrame) -> DataFrame:
             c.agent_list(uid=aid, version=F.lit(None).cast("string")).alias("agent_list"),
         ).alias("src_endpoint"),
     ]
-    return _finish(df, cols, "http_activity_extapi")
+    return _finish(df, c, cols, "http_activity_extapi")
 
 
 # --------------------------------------------------------------------- #
@@ -562,7 +563,7 @@ def normalize_file_system_activity(df: DataFrame) -> DataFrame:
         ).alias("file"),
         residual_unmapped(c.raw, consumed).alias("unmapped"),
     ]
-    return _finish(df, cols, "file_system_activity")
+    return _finish(df, c, cols, "file_system_activity")
 
 
 # --------------------------------------------------------------------- #
@@ -593,7 +594,7 @@ def normalize_dns_activity(df: DataFrame) -> DataFrame:
         F.lit("NoError").alias("rcode"),
         residual_unmapped(c.raw, consumed).alias("unmapped"),
     ]
-    return _finish(df, cols, "dns_activity")
+    return _finish(df, c, cols, "dns_activity")
 
 
 # --------------------------------------------------------------------- #
@@ -649,7 +650,7 @@ def normalize_authentication(df: DataFrame) -> DataFrame:
     cols = envelope_cols(event_name=_ev(c), common=c, observables=obs, profiles=[])
     cols += [
         c.device_struct().alias("src_endpoint"),
-        F.struct(pid.cast("long").alias("pid")).alias("logon_process"),
+        F.struct(c.typed("RawProcessId", "long").alias("pid")).alias("logon_process"),
         F.struct(
             user_name.alias("name"),
             user_principal.alias("uid"),
@@ -664,7 +665,7 @@ def normalize_authentication(df: DataFrame) -> DataFrame:
         lt_id.alias("logon_type_id"),
         residual_unmapped(c.raw, consumed).alias("unmapped"),
     ]
-    return _finish(df, cols, "authentication")
+    return _finish(df, c, cols, "authentication")
 
 
 # --------------------------------------------------------------------- #
@@ -680,7 +681,7 @@ def normalize_file_hosting_activity(df: DataFrame) -> DataFrame:
     content_sha = nonempty(r["ContentSHA256HashData"])
     sha256 = F.coalesce(sha, content_sha)
     dl_server = nonempty(r["DownloadServer"])
-    dl_port = nonempty(r["DownloadPort"]).cast("long")
+    dl_port = c.typed("DownloadPort", "long")
 
     hashes = hashes_array(hash_entry(sha256, 3, "SHA-256"))
     obs = observables_array(
@@ -711,7 +712,7 @@ def normalize_file_hosting_activity(df: DataFrame) -> DataFrame:
         ).alias("file"),
         residual_unmapped(c.raw, consumed).alias("unmapped"),
     ]
-    return _finish(df, cols, "file_hosting_activity")
+    return _finish(df, c, cols, "file_hosting_activity")
 
 
 # --------------------------------------------------------------------- #
@@ -762,7 +763,7 @@ def normalize_module_activity(df: DataFrame) -> DataFrame:
         ).alias("module"),
         residual_unmapped(c.raw, consumed).alias("unmapped"),
     ]
-    return _finish(df, cols, "module_activity")
+    return _finish(df, c, cols, "module_activity")
 
 
 # --------------------------------------------------------------------- #
@@ -812,7 +813,7 @@ def normalize_application_lifecycle(df: DataFrame) -> DataFrame:
         ).alias("app"),
         residual_unmapped(c.raw, consumed).alias("unmapped"),
     ]
-    return _finish(df, cols, "application_lifecycle")
+    return _finish(df, c, cols, "application_lifecycle")
 
 
 # --------------------------------------------------------------------- #
@@ -855,7 +856,7 @@ def normalize_operating_system_patch_state(df: DataFrame) -> DataFrame:
         kbs.alias("kb_article_list"),
         residual_unmapped(c.raw, consumed).alias("unmapped"),
     ]
-    return _finish(df, cols, "operating_system_patch_state")
+    return _finish(df, c, cols, "operating_system_patch_state")
 
 
 # --------------------------------------------------------------------- #
@@ -940,7 +941,7 @@ def normalize_detection_finding(df: DataFrame) -> DataFrame:
         F.array(evidence).alias("evidences"),
         residual_unmapped(c.raw, consumed).alias("unmapped"),
     ]
-    return _finish(df, cols, "detection_finding")
+    return _finish(df, c, cols, "detection_finding")
 
 
 # table_key -> normalizer builder
@@ -963,16 +964,22 @@ NORMALIZERS: dict[str, Callable[[DataFrame], DataFrame]] = {
 
 def normalize_class(df: DataFrame, table_key: str) -> DataFrame:
     """Apply the class normalizer to an already-classified DataFrame."""
-    cols = _COLS_CACHE.get(table_key)
-    if cols is not None:
-        return df.select(*cols).to(OCSF_SCHEMAS[table_key][2])
+    built = _COLS_CACHE.get(table_key)
+    if built is not None:
+        return df.select(*built[0]).to(OCSF_SCHEMAS[table_key][2])
     return NORMALIZERS[table_key](df)
 
 
 def class_columns(table_key: str, df: DataFrame) -> list[Column]:
-    """The class's pre-cast projection columns (for the E5 cast-failure
-    split in operators/castcheck.py).  Builds the normalizer plan once if
-    the pure-expression cache is cold."""
+    """The class's projection columns, building the normalizer plan once
+    if the pure-expression cache is cold; the build also records the
+    class's casts (``class_casts``)."""
     if table_key not in _COLS_CACHE:
         NORMALIZERS[table_key](df)
-    return _COLS_CACHE[table_key]
+    return _COLS_CACHE[table_key][0]
+
+
+def class_casts(table_key: str) -> list[CastSite]:
+    """Every string -> number/timestamp site of a built class (E5 cast
+    check, operators/castcheck.py), recorded by ``Common.typed``."""
+    return _COLS_CACHE[table_key][1]

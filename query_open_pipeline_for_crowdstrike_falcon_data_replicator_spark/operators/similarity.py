@@ -663,7 +663,7 @@ def embedding_triplets_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded cosines, id-ascending ties), so DuckDB replays it exactly —
     see ``_triplets_ivf_oracle_sql``.  Agreement with the exact form is
     pinned in tests; the 1M-vector serve-path probe rides the persisted
-    index via ``tools/ann_scale_probe.py``."""
+    index via ``tools/ann_scale_probe.py`` (the probe at commit d9bd2f7)."""
     emb = tracked_persist(
         _embedded(spark, sf_dir)
         .withColumn("u", F.transform(F.col("v"), lambda x: x / F.col("nrm")))

@@ -23,8 +23,8 @@ costs nothing but orphans for ``vacuum_snapshots`` to reap.
 
 Compaction rewrites the full table, so ``compact_every`` trades that
 rewrite cost against probe-planning decay; the spanmaint long-run probe
-(``tools/spanmaint_scale_probe.py --compact-every``) measures both
-sides.  Readers are never disturbed (snapshot isolation), and the txn
+(``tools/spanmaint_scale_probe.py --compact-every``, the probe at
+commit d9bd2f7) measures both sides.  Readers are never disturbed (snapshot isolation), and the txn
 map rides every compaction commit, so replay fencing survives.
 """
 

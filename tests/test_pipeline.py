@@ -4,6 +4,8 @@ quarantine, schemas conforming to ocsf.schemas, event-time partitioning."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.ocsf.schemas import (
@@ -106,10 +108,10 @@ def test_unmapped_residual(spark, ocsf_out):
 
 
 def test_cast_failure_quarantine(spark, tmp_path):
-    """E5: rows whose direct numeric/timestamp cast would silently null a
-    present raw value are DIVERTED to _quarantine/cast_failures (the
-    reference Firehose's failures/ prefix), not written with nulled
-    fields; clean rows are untouched."""
+    """E5: rows with a present value that does not convert to its number
+    or timestamp are DIVERTED to _quarantine/cast_failures (the reference
+    Firehose's failures/ prefix), not written with nulled fields; clean
+    rows are untouched."""
     import json
 
     from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.pipeline import (
@@ -128,10 +130,26 @@ def test_cast_failure_quarantine(spark, tmp_path):
     proc = next(
         e for e in FIXTURES if e.get("event_simpleName") == "ProcessRollup2"
     )
+    api = next(
+        e for e in FIXTURES if e.get("ExternalApiType") == "Event_AuthActivityAuditEvent"
+    )
     bad_port = dict(net, RemotePort="80x", id="evt-badport")
     bad_pid = dict(proc, RawProcessId="not-a-pid", id="evt-badpid")
     bad_ts = dict(net, timestamp="yesterday", id="evt-badts")
-    lines = [json.dumps(e) for e in (net, proc, bad_port, bad_pid, bad_ts)]
+    bad_status = dict(api, AuditKeyValues=[
+        dict(kv, ValueString="abc") if kv["Key"] == "status_code" else kv
+        for kv in api["AuditKeyValues"]
+    ])
+    # non-numbers and timestamps past year 9999 (3e14 ms) are failures
+    out_of_range = [dict(net, timestamp=t, id=f"evt-ts-{t}") for t in ("NaN", "1e20", "3e14")]
+    # '' is absent (X11); Spark's cast trims; fractions and negatives parse
+    typed_ok = [
+        dict(net, timestamp="", id="evt-ts-empty"),
+        dict(net, RemotePort=" 443", timestamp="1718000000.5", id="evt-ok-frac"),
+        dict(net, timestamp="-5", id="evt-ok-neg"),
+    ]
+    events = (net, proc, bad_port, bad_pid, bad_ts, bad_status, *out_of_range, *typed_ok)
+    lines = [json.dumps(e) for e in events]
     out = str(tmp_path / "ocsf")
     parsed = parse_fdr_lines(
         spark.createDataFrame([(l,) for l in lines], ["value"]).repartition(1)
@@ -143,12 +161,20 @@ def test_cast_failure_quarantine(spark, tmp_path):
     for r in q:
         by_sink.setdefault(r.sink, []).append(sorted(r.bad_fields))
     assert {k: sorted(v) for k, v in by_sink.items()} == {
-        "network_activity": [["RemotePort"], ["timestamp"]],
+        "network_activity": [["RemotePort"]] + [["timestamp"]] * 4,
         "process_activity": [["RawProcessId"]],
+        "http_activity_extapi": [["AuditKeyValues.status_code"]],
     }, by_sink
     # diverted rows never reach the typed tables; the clean ones do
-    net_rows = spark.read.parquet(f"{out}/network_activity").collect()
-    assert len(net_rows) == 1 and net_rows[0].dst_endpoint.port == 443
+    net_rows = {
+        r.metadata.uid: r for r in spark.read.parquet(f"{out}/network_activity").collect()
+    }
+    assert sorted(net_rows) == ["evt-0001", "evt-ok-frac", "evt-ok-neg", "evt-ts-empty"]
+    assert net_rows["evt-0001"].dst_endpoint.port == 443
+    assert str(net_rows["evt-ts-empty"].time) == "1998-04-24 02:07:39"
+    assert net_rows["evt-ok-frac"].dst_endpoint.port == 443
+    assert str(net_rows["evt-ok-frac"].time) == "2024-06-10 06:13:20.500000"
+    assert str(net_rows["evt-ok-neg"].time) == "1969-12-31 23:59:55"
     proc_rows = spark.read.parquet(f"{out}/process_activity").collect()
     assert len(proc_rows) == 1 and proc_rows[0].process.pid == 4832
 
@@ -285,6 +311,108 @@ def test_cast_quarantine_wrapper_matches_batch_sinks(spark):
             assert rows(tables[key]) == rows(sinks[key]), key
         got = rows(failures)
         assert len(got) == 2 and got == rows(sinks["_quarantine/cast_failures"])
+
+
+# Every recorded cast site, on the sample fixture that carries it:
+# (fixture event name, raw or AuditKeyValues key, the site's typed output)
+_CAST_SITES = [
+    ("ProcessRollup2", "timestamp", lambda r: r.time),
+    ("Event_AuthActivityAuditEvent", "UTCTimestamp", lambda r: r.time),
+    ("HttpRequest", "LocalPort", lambda r: r.src_endpoint.port),
+    ("NetworkConnectIP4", "LocalPort", lambda r: r.observables[0].value),
+    ("NetworkConnectIP4", "RemotePort", lambda r: r.dst_endpoint.port),
+    ("ProcessRollup2", "RawProcessId", lambda r: r.process.pid),
+    ("UserLogon", "RawProcessId", lambda r: r.logon_process.pid),
+    ("LfoUploadStart", "DownloadPort", lambda r: r.dst_endpoint.port),
+    # status 0 "Unknown" is the absent-status_code branch
+    ("Event_AuthActivityAuditEvent", "AuditKeyValues.status_code", lambda r: r.status_id or None),
+    ("Event_AuthActivityAuditEvent", "AuditKeyValues.request_uri_length",
+     lambda r: r.http_request.length),
+]
+
+_NUMERIC_ISH = st.one_of(
+    st.text(alphabet="0123456789+-.eEx ", max_size=24),
+    st.integers(min_value=-(10**20), max_value=10**20).map(str),
+    st.floats().map(repr),
+    st.sampled_from(["", " ", "NaN", "Infinity", "-Infinity", "inf", " 443", "0x1F"]),
+)
+
+# empty, overflowing, non-finite and non-numeric values: each defaults or
+# quarantines, none may raise or land as a wrong time
+_PROBE_CASES = [
+    (0, ""), (1, ""), (0, "1e20"), (0, "9.99e15"), (0, "1e300"), (0, "-1e300"),
+    (0, "Infinity"), (0, "NaN"), (8, "abc"), (9, "4.2x"),
+]
+
+
+def _fuzzed_event(i: int, site: int, value: str) -> dict:
+    """The site's fixture with ``value`` at the site's key and the id
+    ``fz-<i>`` (extapi rows take metadata.uid from the trace_id AV)."""
+    import copy
+
+    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sources.sample import (
+        FIXTURES,
+    )
+
+    name, key, _ = _CAST_SITES[site]
+    e = copy.deepcopy(next(
+        f for f in FIXTURES if name in (f.get("event_simpleName"), f.get("ExternalApiType"))
+    ))
+    e["id"] = f"fz-{i}"
+    av = {"trace_id": f"fz-{i}"}
+    if key.startswith("AuditKeyValues."):
+        av[key.split(".", 1)[1]] = value
+    else:
+        e[key] = value
+    if "AuditKeyValues" in e:
+        e["AuditKeyValues"] = [dict(kv, ValueString=av.get(kv["Key"], kv["ValueString"]))
+                               for kv in e["AuditKeyValues"]]
+    return e
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(cases=st.lists(st.tuples(st.integers(0, len(_CAST_SITES) - 1), _NUMERIC_ISH),
+                      min_size=1, max_size=80))
+@example(cases=_PROBE_CASES)
+def test_cast_sites_ansi_fuzz(spark, cases):
+    """Fuzzed numeric-ish strings at every recorded cast site, with ANSI
+    casts on and off: collecting all 17 sinks never raises, every line
+    lands once, a failing value is quarantined under its label, a tabled
+    present value is typed non-null, and both settings give the same
+    sinks."""
+    import json as _json
+    from concurrent.futures import ThreadPoolExecutor
+
+    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.pipeline import (
+        batch_sinks,
+    )
+    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sources.sample import (
+        FIXTURES,
+    )
+
+    events = [_fuzzed_event(i, site, value) for i, (site, value) in enumerate(cases)]
+    snapshots = {}
+    try:
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            with batch_sinks(spark, _fixture_batch(spark, events)) as sinks, \
+                    ThreadPoolExecutor(max_workers=4) as pool:
+                got = dict(zip(sinks, pool.map(lambda df: df.collect(), sinks.values())))
+            assert sum(map(len, got.values())) == len(FIXTURES) + len(events)
+            tabled = {r.metadata.uid: r for k in TABLE_KEYS for r in got[k]}
+            failed = {_json.loads(r.value)["id"]: r.bad_fields
+                      for r in got["_quarantine/cast_failures"]}
+            for i, (site, value) in enumerate(cases):
+                _, key, typed = _CAST_SITES[site]
+                uid = f"fz-{i}"
+                if uid in failed:
+                    assert failed[uid] == [key] and value != "", (key, value)
+                else:
+                    assert value == "" or typed(tabled[uid]) is not None, (key, value)
+            snapshots[ansi] = {k: sorted(map(repr, rows)) for k, rows in got.items()}
+    finally:
+        spark.conf.unset("spark.sql.ansi.enabled")
+    assert snapshots["true"] == snapshots["false"]
 
 
 def test_batch_frame_released_after_every_batch(spark, tmp_path, monkeypatch):
