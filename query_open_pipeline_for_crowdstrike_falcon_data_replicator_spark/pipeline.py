@@ -47,11 +47,20 @@ def normalized_tables_with_cast_quarantine(
     return _class_sinks(split_cast_failures(classified))
 
 
+# the 4 side outputs, keyed like the 13 tables by their path under the lake root
+QUARANTINE_KEYS = (
+    "_quarantine/cast_failures",
+    "_quarantine/corrupt_lines",
+    "_quarantine/no_discriminator",
+    "_quarantine/unmapped_events",
+)
+
+
 @contextmanager
 def batch_sinks(spark: SparkSession, parsed: DataFrame) -> Iterator[dict[str, DataFrame]]:
     """Every sink of one parsed batch, keyed by its path under the lake
     root: the 13 normalized tables (``TABLE_KEYS`` order, no partition
-    columns yet) followed by the 4 ``_quarantine/*`` frames.  Batch and
+    columns yet) followed by the 4 ``QUARANTINE_KEYS`` frames.  Batch and
     stream both build their writes from this one dict.
 
     The batch is classified and cast-checked once, into one persisted
@@ -59,13 +68,13 @@ def batch_sinks(spark: SparkSession, parsed: DataFrame) -> Iterator[dict[str, Da
     routed = split_cast_failures(classify(parsed, spark)).persist()
     try:
         tables, cast_failures = _class_sinks(routed)
-        yield {
-            **tables,
-            "_quarantine/cast_failures": cast_failures,
-            "_quarantine/corrupt_lines": corrupt_lines(routed),
-            "_quarantine/no_discriminator": no_discriminator(routed).drop("raw"),
-            "_quarantine/unmapped_events": unmapped_events(routed),
-        }
+        quarantines = (
+            cast_failures,
+            corrupt_lines(routed),
+            no_discriminator(routed).drop("raw"),
+            unmapped_events(routed),
+        )
+        yield {**tables, **dict(zip(QUARANTINE_KEYS, quarantines))}
     finally:
         routed.unpersist()
 

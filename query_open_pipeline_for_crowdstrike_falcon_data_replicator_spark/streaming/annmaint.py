@@ -45,7 +45,6 @@ Reference parity: the reference never serves vector queries (SURVEY.md
 
 from __future__ import annotations
 
-import hashlib
 import posixpath
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -73,6 +72,7 @@ from ..operators.similarity import (
 )
 from ..sinks.snapshot import read_snapshot_pruned, write_snapshot
 from ..sinks.fsutil import json_meta_io
+from .compaction import CompactionSpec, read_json_stream, start_snapshot_stream
 from .curation import _snapshot_or_none
 
 EMB_SCHEMA = StructType(
@@ -332,7 +332,6 @@ def run_ann_stream(
     n_cells: int = IVF_CELLS,
     retrain_drift: float | None = None,
     compact_every: int | None = None,
-    compact_max_files: int | None = None,
 ):
     """Stream NDJSON embedding files (vec_id, embedding) through
     incremental ANN index maintenance: exactly-once serves / index
@@ -340,41 +339,19 @@ def run_ann_stream(
     ``retrain_drift`` arms the drift-triggered rebuild (see
     ``extend_ann_index``).  ``compact_every=N`` re-clusters the
     snapshot tables after every N-th batch (replay-fenced, see
-    ``streaming/compaction``; ``compact_max_files=M`` instead triggers
-    on the index's live file count — the self-scaling form)."""
-    from .compaction import compact_twin_tables
-
-    reader = spark.readStream.schema(EMB_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(input_path)
-
-    app = "annmaint-" + hashlib.md5(checkpoint.encode()).hexdigest()[:12]
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        extend_ann_index(
+    ``streaming/compaction``)."""
+    return start_snapshot_stream(
+        read_json_stream(spark, EMB_SCHEMA, input_path, max_files_per_trigger),
+        checkpoint,
+        "annmaint",
+        lambda df, batch_id, txn_app: extend_ann_index(
             spark,
-            batch_df,
+            df,
             out_path,
             batch_id,
-            txn_app=app,
+            txn_app=txn_app,
             n_cells=n_cells,
             retrain_drift=retrain_drift,
-        )
-        compact_twin_tables(
-            spark,
-            out_path,
-            [SERVES_TABLE, INDEX_TABLE],
-            txn_app=app,
-            batch_id=batch_id,
-            canonical=INDEX_TABLE,
-            compact_every=compact_every,
-            max_live_files=compact_max_files,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        compact=CompactionSpec(out_path, [SERVES_TABLE, INDEX_TABLE], INDEX_TABLE, compact_every),
     )

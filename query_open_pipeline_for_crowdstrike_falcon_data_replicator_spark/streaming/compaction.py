@@ -1,18 +1,29 @@
-"""Periodic snapshot compaction for the streaming maintenance twins.
+"""One start path for every streamed snapshot writer, and its one
+compaction scheduler.
 
-Every maintenance twin (span / curation / graph / triplet / ANN / LM)
-appends a fresh clustered file-set to its snapshot tables each
-micro-batch.
-After thousands of micro-batches the manifest carries thousands of
-overlapping [min, max] ranges and the trickle-probe file-skip degrades
-toward a full scan.  ``sinks/snapshot.compact_snapshot`` already
+Every foreachBatch driver in ``streaming/`` — ``run_stream``, the EWMA
+monitor's snapshot sink, sketch maintenance, packing and the
+maintenance twins — is a per-batch callback handed to
+``start_snapshot_stream``.  It owns the writer identity, the
+foreachBatch/checkpoint/trigger wiring and, given a
+``CompactionSpec``, the replay-fenced ``compact_twin_tables`` call
+after each batch.  ``read_json_stream`` is the NDJSON file source the
+JSON drivers share.
+
+Writer identity: ``"<prefix>-" + md5(checkpoint)[:12]``.  The source
+replays batch ids per checkpoint, so the txn idempotence scope must
+match it exactly.  Each driver's prefix is part of its lakes' txn marks:
+changing one would let a replay of an existing lake commit twice.
+
+Every snapshot table a stream appends to gains fresh files each
+micro-batch.  After thousands of micro-batches the manifest carries
+thousands of overlapping [min, max] ranges and the trickle-probe
+file-skip degrades toward a full scan.  ``sinks/snapshot.compact_snapshot``
 re-clusters a table and tightens its ranges (per-batch appends each
 cover the whole key range, so compaction is precisely when the ranges
-become disjoint again); this module is the missing scheduler — the
-twins' analogue of ``streaming/pipeline.run_stream``'s ``compact_every``,
-adding the txn-mark fence and a live-file-count trigger.
+become disjoint again); ``compact_twin_tables`` schedules it.
 
-Replay semantics: compaction is fenced on the twin's txn high-water
+Replay semantics: compaction is fenced on the writer's txn high-water
 mark.  It fires only when the CANONICAL table's mark for this writer is
 exactly ``batch_id`` — true both when the batch just committed and when
 the last batch replays after a crash (including a crash in the middle of
@@ -30,15 +41,18 @@ map rides every compaction commit, so replay fencing survives.
 
 from __future__ import annotations
 
+import hashlib
 import posixpath
+from collections.abc import Callable
+from typing import NamedTuple
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 from ..sinks.snapshot import (
     compact_snapshot,
     current_version,
     last_txn_version,
-    snapshot_files,
     vacuum_snapshots,
 )
 
@@ -52,29 +66,18 @@ def compact_twin_tables(
     batch_id: int,
     canonical: str,
     compact_every: int | None = None,
-    max_live_files: int | None = None,
     target_files: int = 0,
     transforms: dict | None = None,
     vacuum_keep_last: int | None = 2,
     vacuum_min_age_seconds: float = 3600.0,
 ) -> list[str]:
-    """Compact each snapshot table under ``out_path`` if the run is DUE
-    and the twin's high-water mark on ``canonical`` is exactly
-    ``batch_id`` (see module docstring for why that is the replay-safe
-    condition).  The cadence lives HERE, not in each sink — sinks call
-    unconditionally per batch and a cadence change edits one place.
-
-    Two triggers, OR-combined; both ``None``/0 disarms (returns []):
-
-    - ``compact_every=N`` — after every N-th batch (fixed cadence);
-    - ``max_live_files=M`` — when the CANONICAL table's live file count
-      reaches M.  This is the self-scaling form BASELINE.md's cost
-      analysis calls for: a compaction rewrite costs O(index), so a
-      fixed cadence pays an ever-growing amortized per-batch cost,
-      while a file-count trigger fires ever more rarely as the index
-      grows (each batch adds a bounded file count), keeping BOTH the
-      probe-planning manifest bounded and the amortized rewrite cost
-      per batch roughly constant.
+    """Compact each snapshot table under ``out_path`` after every
+    ``compact_every``-th batch, if the writer's high-water mark on
+    ``canonical`` is exactly ``batch_id`` (see module docstring for why
+    that is the replay-safe condition).  ``compact_every`` unset or 0
+    returns [] before any manifest read.  The cadence lives HERE, not in
+    each sink — sinks call unconditionally per batch and a cadence
+    change edits one place.
 
     Direct invocations that want to compact NOW pass
     ``compact_every=1``.  Tables that do not exist yet are skipped.
@@ -85,7 +88,7 @@ def compact_twin_tables(
     Each compacted table is then VACUUMED (``vacuum_snapshots`` with
     ``vacuum_keep_last``/``vacuum_min_age_seconds``): compaction is
     exactly what turns old versions into dead weight — without GC a
-    long-running twin's storage grows as O(batches x table size) even
+    long-running stream's storage grows as O(batches x table size) even
     though the live snapshot is bounded.  On by default because the
     age guard makes it safe next to live writers and pinned readers
     (nothing younger than the threshold is deleted; Delta's VACUUM
@@ -93,14 +96,7 @@ def compact_twin_tables(
     replay fencing survives.  ``vacuum_keep_last=None`` opts out
     (time travel then reaches every version).
     Returns the compacted table names."""
-    due = bool(compact_every) and (batch_id + 1) % compact_every == 0
-    if not due and max_live_files:
-        # one manifest read — the canonical table's live file count
-        try:
-            due = len(snapshot_files(spark, posixpath.join(out_path, canonical))) >= max_live_files
-        except FileNotFoundError:
-            due = False
-    if not due:
+    if not compact_every or (batch_id + 1) % compact_every:
         return []
     mark = last_txn_version(
         spark, posixpath.join(out_path, canonical), txn_app
@@ -127,3 +123,67 @@ def compact_twin_tables(
             )
         done.append(t)
     return done
+
+
+class CompactionSpec(NamedTuple):
+    """What ``start_snapshot_stream`` hands ``compact_twin_tables`` after
+    each batch: the tables under ``out_path``, the one whose txn mark
+    fences the pass, the cadence, and any merge-on-read folds."""
+
+    out_path: str
+    tables: list[str]
+    canonical: str
+    compact_every: int | None
+    transforms: dict | None = None
+
+
+def read_json_stream(
+    spark: SparkSession,
+    schema,
+    input_path: str,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """The NDJSON file-source stream under ``input_path``, read with
+    ``schema``; ``max_files_per_trigger`` caps each micro-batch."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.json(input_path)
+
+
+def writer_identity(prefix: str, checkpoint: str) -> str:
+    """The txn writer id a stream commits under (see module docstring)."""
+    return prefix + "-" + hashlib.md5(checkpoint.encode()).hexdigest()[:12]
+
+
+def _start(stream: DataFrame, sink, checkpoint: str, trigger: dict | None) -> StreamingQuery:
+    return (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint)
+        .trigger(**(trigger or {"availableNow": True}))
+        .start()
+    )
+
+
+def start_snapshot_stream(
+    stream: DataFrame,
+    checkpoint: str,
+    prefix: str,
+    apply_batch: Callable[[DataFrame, int, str], None],
+    *,
+    trigger: dict | None = None,
+    compact: CompactionSpec | None = None,
+) -> StreamingQuery:
+    """Start ``stream`` with ``apply_batch(batch_df, batch_id, txn_app)``
+    as its foreachBatch body, checkpointed at ``checkpoint``.
+    ``trigger`` defaults to ``availableNow``.  With ``compact``, each
+    batch then runs ``compact_twin_tables`` on that spec."""
+    spark = stream.sparkSession
+    txn_app = writer_identity(prefix, checkpoint)
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        apply_batch(batch_df, batch_id, txn_app)
+        if compact is not None:
+            compact_twin_tables(spark, txn_app=txn_app, batch_id=batch_id, **compact._asdict())
+
+    return _start(stream, _sink, checkpoint, trigger)

@@ -43,7 +43,6 @@ dedup_minhash_lsh, dedup_incremental).
 
 from __future__ import annotations
 
-import hashlib
 import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
@@ -69,6 +68,7 @@ from ..sinks.snapshot import (
     read_snapshot_pruned,
     write_snapshot,
 )
+from .compaction import CompactionSpec, read_json_stream, start_snapshot_stream
 
 DOC_SCHEMA = StructType(
     [StructField("doc_id", LongType()), StructField("text", StringType())]
@@ -302,40 +302,20 @@ def run_curation_stream(
     checkpoint: str,
     *,
     max_files_per_trigger: int | None = None,
-    trigger: dict | None = None,
     compact_every: int | None = None,
-    compact_max_files: int | None = None,
 ) -> StreamingQuery:
     """Stream NDJSON document files (doc_id, text) through the curation
     gate into an exactly-once curated corpus + dedup index.
     ``compact_every=N`` re-clusters the snapshot tables after every
-    N-th batch (replay-fenced, see ``streaming/compaction``;
-    ``compact_max_files=M`` instead triggers on the index's live file
-    count — the self-scaling form)."""
-    from .compaction import compact_twin_tables
-
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(input_path)
-
-    app = "curate-" + hashlib.md5(checkpoint.encode()).hexdigest()[:12]
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        curate_batch(spark, batch_df, out_path, batch_id, txn_app=app)
-        compact_twin_tables(
-            spark,
-            out_path,
-            [DOCS_TABLE, BANDS_TABLE, PROFILES_TABLE],
-            txn_app=app,
-            batch_id=batch_id,
-            canonical=PROFILES_TABLE,
-            compact_every=compact_every,
-            max_live_files=compact_max_files,
-        )
-
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
+    N-th batch (replay-fenced, see ``streaming/compaction``)."""
+    return start_snapshot_stream(
+        read_json_stream(spark, DOC_SCHEMA, input_path, max_files_per_trigger),
+        checkpoint,
+        "curate",
+        lambda df, batch_id, txn_app: curate_batch(
+            spark, df, out_path, batch_id, txn_app=txn_app
+        ),
+        compact=CompactionSpec(
+            out_path, [DOCS_TABLE, BANDS_TABLE, PROFILES_TABLE], PROFILES_TABLE, compact_every
+        ),
     )
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()

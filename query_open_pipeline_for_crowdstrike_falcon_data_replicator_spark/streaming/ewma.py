@@ -35,6 +35,8 @@ from pyspark.sql.types import (
 )
 
 from ..plans.relational import EWMA_HORIZON, EWMA_SPIKE_ABS, RESAMPLE_SECONDS
+from ..sinks.snapshot import write_snapshot
+from .compaction import read_json_stream, start_snapshot_stream
 
 EWMA_OUT_SCHEMA = StructType(
     [
@@ -169,37 +171,25 @@ def run_ewma_monitor(
             StructField("value", DoubleType()),
         ]
     )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = (
-        reader.json(input_path)
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    out = ewma_monitor(stream)
-    if output_path is not None:
-        import hashlib
-
-        from ..sinks.snapshot import write_snapshot
-
-        app = "ewma-" + hashlib.md5(checkpoint.encode()).hexdigest()[:12]
-
-        def _sink(df, batch_id: int) -> None:
-            if write_snapshot(
-                spark, df, output_path, txn_app=app, txn_version=batch_id
-            ) is None:
-                # a fenced replay must still run the stateful plan: Spark
-                # fails the batch unless every state store partition
-                # commits (STATE_STORE_COMMIT_VALIDATION_FAILED)
-                df.write.format("noop").mode("overwrite").save()
-
-        writer = out.writeStream.foreachBatch(_sink)
-    else:
-        writer = out.writeStream.format("memory").queryName(queryName).outputMode(
-            "append"
+    stream = read_json_stream(spark, schema, input_path, max_files_per_trigger)
+    out = ewma_monitor(stream.withColumn("ts", F.to_timestamp("ts")))
+    if output_path is None:
+        return (
+            out.writeStream.format("memory")
+            .queryName(queryName)
+            .outputMode("append")
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
         )
-    return (
-        writer.option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+
+    def _commit(df, batch_id: int, txn_app: str) -> None:
+        if write_snapshot(
+            spark, df, output_path, txn_app=txn_app, txn_version=batch_id
+        ) is None:
+            # a fenced replay must still run the stateful plan: Spark
+            # fails the batch unless every state store partition
+            # commits (STATE_STORE_COMMIT_VALIDATION_FAILED)
+            df.write.format("noop").mode("overwrite").save()
+
+    return start_snapshot_stream(out, checkpoint, "ewma", _commit)

@@ -38,7 +38,6 @@ Reference parity: the reference has no training-data stage (SURVEY.md
 
 from __future__ import annotations
 
-import hashlib
 import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,8 +45,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..sinks.snapshot import read_snapshot
-from .curation import DOC_SCHEMA, DOCS_TABLE, curate_batch
-from .packing import pack_batch
+from .compaction import CompactionSpec, read_json_stream, start_snapshot_stream
+from .curation import BANDS_TABLE, DOC_SCHEMA, DOCS_TABLE, PROFILES_TABLE, curate_batch
+from .packing import PACKED_TABLE, pack_batch
 
 CURATE_DIR = "curate"
 PACK_DIR = "pack"
@@ -91,44 +91,23 @@ def run_export_stream(
     *,
     max_files_per_trigger: int | None = None,
     compact_every: int | None = None,
-    compact_max_files: int | None = None,
 ) -> StreamingQuery:
     """Stream NDJSON document files (doc_id, text) through the composed
     curate -> pack pipeline: exactly-once curated corpus + dedup index
-    + packed-sequence snapshots.  The shared compaction triggers cover
+    + packed-sequence snapshots.  The shared compaction cadence covers
     the pipeline's growing tables (the curate corpus/index and the
     packed table; the one-row state table never needs it)."""
-    from .compaction import compact_twin_tables
-    from .curation import BANDS_TABLE, PROFILES_TABLE
-    from .packing import PACKED_TABLE
-
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(input_path)
-
-    app = "export-" + hashlib.md5(checkpoint.encode()).hexdigest()[:12]
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        export_batch(spark, batch_df, out_path, batch_id, txn_app=app)
-        compact_twin_tables(
-            spark,
-            out_path,
-            [
-                posixpath.join(CURATE_DIR, t)
-                for t in (DOCS_TABLE, BANDS_TABLE, PROFILES_TABLE)
-            ]
-            + [posixpath.join(PACK_DIR, PACKED_TABLE)],
-            txn_app=app,
-            batch_id=batch_id,
-            canonical=posixpath.join(CURATE_DIR, PROFILES_TABLE),
-            compact_every=compact_every,
-            max_live_files=compact_max_files,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    tables = [
+        posixpath.join(CURATE_DIR, t) for t in (DOCS_TABLE, BANDS_TABLE, PROFILES_TABLE)
+    ] + [posixpath.join(PACK_DIR, PACKED_TABLE)]
+    return start_snapshot_stream(
+        read_json_stream(spark, DOC_SCHEMA, input_path, max_files_per_trigger),
+        checkpoint,
+        "export",
+        lambda df, batch_id, txn_app: export_batch(
+            spark, df, out_path, batch_id, txn_app=txn_app
+        ),
+        compact=CompactionSpec(
+            out_path, tables, posixpath.join(CURATE_DIR, PROFILES_TABLE), compact_every
+        ),
     )

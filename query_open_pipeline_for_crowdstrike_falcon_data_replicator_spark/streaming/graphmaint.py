@@ -53,7 +53,6 @@ sequential-admission protocol).
 
 from __future__ import annotations
 
-import hashlib
 import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
@@ -62,6 +61,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import lsh_bands, minhash_profiles, postings_of
 from ..sinks.snapshot import write_snapshot
+from .compaction import CompactionSpec, read_json_stream, start_snapshot_stream
 from .curation import DOC_SCHEMA, _exact_jaccard, _snapshot_or_none
 
 PAIRS_TABLE = "pairs"
@@ -182,40 +182,20 @@ def run_graph_stream(
     *,
     max_files_per_trigger: int | None = None,
     compact_every: int | None = None,
-    compact_max_files: int | None = None,
 ) -> StreamingQuery:
     """Stream NDJSON document files (doc_id, text) through the pair-graph
     maintenance path: an exactly-once, incrementally-extended near-dup
     edge snapshot plus the band/profile index the next batch probes.
     ``compact_every=N`` re-clusters the snapshot tables after every
-    N-th batch (replay-fenced, see ``streaming/compaction``;
-    ``compact_max_files=M`` instead triggers on the index's live file
-    count — the self-scaling form)."""
-    from .compaction import compact_twin_tables
-
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(input_path)
-
-    app = "graphmaint-" + hashlib.md5(checkpoint.encode()).hexdigest()[:12]
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        extend_pair_graph(spark, batch_df, out_path, batch_id, txn_app=app)
-        compact_twin_tables(
-            spark,
-            out_path,
-            [PAIRS_TABLE, BANDS_TABLE, PROFILES_TABLE],
-            txn_app=app,
-            batch_id=batch_id,
-            canonical=PROFILES_TABLE,
-            compact_every=compact_every,
-            max_live_files=compact_max_files,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    N-th batch (replay-fenced, see ``streaming/compaction``)."""
+    return start_snapshot_stream(
+        read_json_stream(spark, DOC_SCHEMA, input_path, max_files_per_trigger),
+        checkpoint,
+        "graphmaint",
+        lambda df, batch_id, txn_app: extend_pair_graph(
+            spark, df, out_path, batch_id, txn_app=txn_app
+        ),
+        compact=CompactionSpec(
+            out_path, [PAIRS_TABLE, BANDS_TABLE, PROFILES_TABLE], PROFILES_TABLE, compact_every
+        ),
     )

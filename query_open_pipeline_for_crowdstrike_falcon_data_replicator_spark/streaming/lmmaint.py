@@ -39,7 +39,7 @@ COMPACTION closes it — ``compact_twin_tables(transforms=...)`` rewrites
 each count table through its groupBy-sum (``compact_snapshot``'s
 ``transform`` hook), so the table periodically collapses back to one
 row per distinct n-gram and the per-serve read amplification stays
-bounded (``compact_max_files`` is the self-scaling trigger).  The fold
+bounded (every ``compact_every``-th batch).  The fold
 is a pure monoid collapse: readers of pre- and post-compaction versions
 see identical cumulative counts.
 
@@ -59,7 +59,6 @@ sequential protocol, the count-monoid argument of
 
 from __future__ import annotations
 
-import hashlib
 import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,6 +67,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..operators.text import _lm_backoff_expr, _ngram_positions
 from ..sinks.snapshot import read_snapshot, read_snapshot_pruned, write_snapshot
+from .compaction import CompactionSpec, read_json_stream, start_snapshot_stream
 from .spanmaint import SPAN_PRUNE_MAX_KEYS as LM_PRUNE_MAX_KEYS
 
 DOC_SCHEMA = StructType(
@@ -323,39 +323,18 @@ def run_lm_stream(
     *,
     max_files_per_trigger: int | None = None,
     compact_every: int | None = None,
-    compact_max_files: int | None = None,
     order: int = 2,
 ):
     """Stream NDJSON document files (doc_id, text) through incremental
     LM maintenance: exactly-once count-delta / scores snapshots, with
-    FOLD compaction of the count tables on the shared cadence triggers
-    (``compact_every`` fixed, ``compact_max_files`` self-scaling)."""
-    from .compaction import compact_twin_tables
-
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(input_path)
-
-    app = "lm-" + hashlib.md5(checkpoint.encode()).hexdigest()[:12]
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        extend_lm(spark, batch_df, out_path, batch_id, txn_app=app, order=order)
-        compact_twin_tables(
-            spark,
-            out_path,
-            _twin_tables(order),
-            txn_app=app,
-            batch_id=batch_id,
-            canonical=BIG_TABLE,
-            compact_every=compact_every,
-            max_live_files=compact_max_files,
-            transforms=FOLDS,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    FOLD compaction of the count tables after every ``compact_every``-th
+    batch."""
+    return start_snapshot_stream(
+        read_json_stream(spark, DOC_SCHEMA, input_path, max_files_per_trigger),
+        checkpoint,
+        "lm",
+        lambda df, batch_id, txn_app: extend_lm(
+            spark, df, out_path, batch_id, txn_app=txn_app, order=order
+        ),
+        compact=CompactionSpec(out_path, _twin_tables(order), BIG_TABLE, compact_every, FOLDS),
     )

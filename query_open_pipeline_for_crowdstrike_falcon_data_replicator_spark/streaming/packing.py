@@ -30,7 +30,6 @@ pinned in tests/test_curation.py.
 
 from __future__ import annotations
 
-import hashlib
 import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,6 +39,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..operators.text import _tokens, pack_assignments
 from ..sinks.snapshot import current_version, read_snapshot, write_snapshot
+from .compaction import read_json_stream, start_snapshot_stream
 
 DOC_SCHEMA = StructType(
     [StructField("doc_id", LongType()), StructField("text", StringType())]
@@ -116,30 +116,15 @@ def run_packing_stream(
     checkpoint: str,
     *,
     max_files_per_trigger: int | None = None,
-    trigger: dict | None = None,
     num_partitions: int | None = None,
 ) -> StreamingQuery:
     """Stream NDJSON document files (doc_id, text) into an exactly-once
     packed-sequence table with a continuous token stream across batches."""
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(input_path)
-
-    app = "pack-" + hashlib.md5(checkpoint.encode()).hexdigest()[:12]
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        pack_batch(
-            spark,
-            batch_df,
-            out_path,
-            batch_id,
-            txn_app=app,
-            num_partitions=num_partitions,
-        )
-
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
+    return start_snapshot_stream(
+        read_json_stream(spark, DOC_SCHEMA, input_path, max_files_per_trigger),
+        checkpoint,
+        "pack",
+        lambda df, batch_id, txn_app: pack_batch(
+            spark, df, out_path, batch_id, txn_app=txn_app, num_partitions=num_partitions
+        ),
     )
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()

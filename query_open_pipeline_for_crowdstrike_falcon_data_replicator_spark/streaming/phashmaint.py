@@ -38,7 +38,6 @@ probe-index protocol, ``dedup_incremental``'s batch-vs-corpus shape).
 
 from __future__ import annotations
 
-import hashlib
 import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,6 +51,7 @@ from ..operators.multimodal import (
     phash_signatures,
 )
 from ..sinks.snapshot import read_snapshot_pruned, write_snapshot
+from .compaction import CompactionSpec, read_json_stream, start_snapshot_stream
 from .curation import DOC_SCHEMA
 
 INDEX_TABLE = "index/bands"
@@ -142,36 +142,16 @@ def run_phash_stream(
     *,
     max_files_per_trigger: int | None = None,
     compact_every: int | None = None,
-    compact_max_files: int | None = None,
 ) -> StreamingQuery:
     """Stream NDJSON document files (doc_id, text) through incremental
     image near-dup maintenance: exactly-once index/pairs snapshots,
-    with compaction of both tables on the shared cadence triggers."""
-    from .compaction import compact_twin_tables
-
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(input_path)
-
-    app = "phash-" + hashlib.md5(checkpoint.encode()).hexdigest()[:12]
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        extend_phash(spark, batch_df, out_path, batch_id, txn_app=app)
-        compact_twin_tables(
-            spark,
-            out_path,
-            [INDEX_TABLE, PAIRS_TABLE],
-            txn_app=app,
-            batch_id=batch_id,
-            canonical=INDEX_TABLE,
-            compact_every=compact_every,
-            max_live_files=compact_max_files,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    with compaction of both tables on the shared cadence."""
+    return start_snapshot_stream(
+        read_json_stream(spark, DOC_SCHEMA, input_path, max_files_per_trigger),
+        checkpoint,
+        "phash",
+        lambda df, batch_id, txn_app: extend_phash(
+            spark, df, out_path, batch_id, txn_app=txn_app
+        ),
+        compact=CompactionSpec(out_path, [INDEX_TABLE, PAIRS_TABLE], INDEX_TABLE, compact_every),
     )

@@ -9,7 +9,6 @@ maxFilesPerTrigger (SURVEY.md §1.4)."""
 
 from __future__ import annotations
 
-import hashlib
 import os
 from concurrent.futures import ThreadPoolExecutor
 
@@ -17,10 +16,11 @@ from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..ocsf.schemas import TABLE_KEYS
-from ..pipeline import batch_sinks
+from ..pipeline import QUARANTINE_KEYS, batch_sinks
 from ..sinks import snapshot as snap
 from ..sinks.parquet import with_partition_cols
 from ..sources.fdr import read_fdr_stream
+from .compaction import CompactionSpec, start_snapshot_stream
 
 
 def run_stream(
@@ -35,9 +35,6 @@ def run_stream(
     trigger: dict | None = None,
     snapshot: bool = True,
     compact_every: int | None = None,
-    vacuum_every: int | None = None,
-    vacuum_keep_last: int = 2,
-    vacuum_min_age_seconds: float = 3600.0,
 ) -> StreamingQuery:
     """Start the streaming pipeline.  ``trigger`` defaults to
     ``availableNow`` (catch-up/replay mode); pass e.g.
@@ -47,10 +44,10 @@ def run_stream(
     the 13 OCSF tables and the 4 ``_quarantine/*`` tables — as a new
     ``sinks/snapshot.py`` manifest version.  Readers get snapshot
     isolation (``read_snapshot``).  A replay is exactly-once through the
-    manifest's per-writer txn high-water mark, keyed by the checkpoint:
-    a new checkpoint is a new writer identity, matching the source's own
-    replay scope.  Each table is fenced on its own, so a batch that died
-    after committing some sinks replays only the rest.  Partition columns
+    manifest's per-writer txn high-water mark, keyed by the checkpoint
+    (``streaming/compaction.writer_identity``).  Each table is fenced on
+    its own, so a batch that died after committing some sinks replays
+    only the rest.  Partition columns
     (region/accountId/eventDay) are kept as data columns: snapshot reads
     plan from explicit file lists, where Hive-style dir inference does
     not apply; eventDay file-skipping comes from parquet row-group stats
@@ -62,25 +59,18 @@ def run_stream(
     removed directory-append path) raises.  It is due to be dropped
     with its last caller.
 
-    compact_every=N rewrites every sink with ``compact_snapshot`` after
-    each N-th batch (a new version; readers keep their pinned file
-    lists).  vacuum_every=N garbage-collects manifests and unreferenced
-    data files after each N-th batch (``vacuum_snapshots``)."""
+    ``compact_every=N`` rewrites and then vacuums every sink after each
+    N-th batch, through the same replay-fenced ``compact_twin_tables``
+    pass as the maintenance twins (readers keep their pinned file
+    lists).  Unset, a batch reads no manifest beyond its own commits."""
     if not snapshot:
         raise ValueError(
             "run_stream commits snapshot tables only; the directory-append "
             "path (snapshot=False) was removed — use pipeline.run_batch for "
             "a Hive-partitioned directory lake"
         )
-    parsed = read_fdr_stream(spark, input_path, max_files_per_trigger)
-    # writer identity = the checkpoint: the source replays batch ids
-    # per checkpoint, so the idempotence scope must match it exactly
-    app = "stream-" + hashlib.md5(checkpoint.encode()).hexdigest()[:12]
 
-    def _due(every: int | None, batch_id: int) -> bool:
-        return bool(every) and (batch_id + 1) % every == 0
-
-    def _sink(batch_df, batch_id: int) -> None:
+    def _commit(batch_df, batch_id: int, txn_app: str) -> None:
         with batch_sinks(spark, batch_df) as sinks:
             def _write(item):
                 key, df = item
@@ -90,7 +80,7 @@ def run_stream(
                 # attribute sees every commit
                 snap.write_snapshot(
                     spark, df, os.path.join(base_path, key),
-                    txn_app=app, txn_version=batch_id,
+                    txn_app=txn_app, txn_version=batch_id,
                 )
 
             # 13 tables + 4 quarantines commit 8 at a time (the reference's
@@ -99,25 +89,15 @@ def run_stream(
             with ThreadPoolExecutor(max_workers=8) as pool:
                 list(pool.map(_write, sinks.items()))
 
-        # every sink was just committed (or was already, on a replay),
-        # so each one has a current version to maintain
-        if _due(compact_every, batch_id):
-            for key in sinks:
-                snap.compact_snapshot(spark, os.path.join(base_path, key))
-        # retention: GC manifests + unreferenced data files (compacted-
-        # away originals, crash orphans).  Age-guarded, so it is safe
-        # next to this very writer's in-flight staging.
-        if _due(vacuum_every, batch_id):
-            for key in sinks:
-                snap.vacuum_snapshots(
-                    spark,
-                    os.path.join(base_path, key),
-                    keep_last=vacuum_keep_last,
-                    min_age_seconds=vacuum_min_age_seconds,
-                )
-
-    writer = parsed.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
+    return start_snapshot_stream(
+        read_fdr_stream(spark, input_path, max_files_per_trigger),
+        checkpoint,
+        "stream",
+        _commit,
+        trigger=trigger,
+        # every sink commits every batch (an empty frame commits an empty
+        # version), so any one of them carries the batch's txn mark
+        compact=CompactionSpec(
+            base_path, [*TABLE_KEYS, *QUARANTINE_KEYS], TABLE_KEYS[0], compact_every
+        ),
     )
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()

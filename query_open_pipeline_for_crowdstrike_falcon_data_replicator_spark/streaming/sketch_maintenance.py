@@ -31,7 +31,6 @@ composed from the driver-checked sketch rollup parts.
 
 from __future__ import annotations
 
-import hashlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,6 +45,7 @@ from pyspark.sql.types import (
 )
 
 from ..sinks.snapshot import current_version, read_snapshot, write_snapshot
+from .compaction import read_json_stream, start_snapshot_stream
 
 EVENT_SCHEMA = StructType(
     [
@@ -124,22 +124,14 @@ def run_sketch_maintenance(
     checkpoint: str,
     *,
     max_files_per_trigger: int | None = None,
-    trigger: dict | None = None,
 ) -> StreamingQuery:
     """Stream NDJSON event files through the incremental rollup into an
     exactly-once daily sketch table."""
-    reader = spark.readStream.schema(EVENT_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(input_path)
-
-    app = "sketch-" + hashlib.md5(checkpoint.encode()).hexdigest()[:12]
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        maintain_batch(spark, batch_df, table_path, batch_id, txn_app=app)
-
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
+    return start_snapshot_stream(
+        read_json_stream(spark, EVENT_SCHEMA, input_path, max_files_per_trigger),
+        checkpoint,
+        "sketch",
+        lambda df, batch_id, txn_app: maintain_batch(
+            spark, df, table_path, batch_id, txn_app=txn_app
+        ),
     )
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()

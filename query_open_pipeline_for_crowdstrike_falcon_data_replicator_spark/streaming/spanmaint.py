@@ -58,7 +58,6 @@ beyond-reference machinery for the training-data pipeline (SURVEY.md
 
 from __future__ import annotations
 
-import hashlib
 import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
@@ -67,6 +66,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import SUBSTRING_K, _window_hashes
 from ..sinks.snapshot import read_snapshot_pruned, write_snapshot
+from .compaction import CompactionSpec, read_json_stream, start_snapshot_stream
 from .curation import DOC_SCHEMA, _snapshot_or_none
 
 CLEAN_TABLE = "cleaned"
@@ -234,41 +234,19 @@ def run_span_stream(
     *,
     max_files_per_trigger: int | None = None,
     compact_every: int | None = None,
-    compact_max_files: int | None = None,
 ) -> StreamingQuery:
     """Stream NDJSON document files (doc_id, text) through incremental
     span removal: an exactly-once cleaned-corpus snapshot plus the
     window-hash index the next batch probes.  ``compact_every=N``
     re-clusters both snapshot tables after every N-th batch (replay-
-    fenced, see ``streaming/compaction``; ``compact_max_files=M``
-    instead triggers on the index's live file count — the self-scaling
-    form) so the window index's pruning ranges stay tight over a
-    long-running stream."""
-    from .compaction import compact_twin_tables
-
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(input_path)
-
-    app = "spanmaint-" + hashlib.md5(checkpoint.encode()).hexdigest()[:12]
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        extend_span_clean(spark, batch_df, out_path, batch_id, txn_app=app)
-        compact_twin_tables(
-            spark,
-            out_path,
-            [CLEAN_TABLE, WINDOWS_TABLE],
-            txn_app=app,
-            batch_id=batch_id,
-            canonical=WINDOWS_TABLE,
-            compact_every=compact_every,
-            max_live_files=compact_max_files,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    fenced, see ``streaming/compaction``) so the window index's pruning
+    ranges stay tight over a long-running stream."""
+    return start_snapshot_stream(
+        read_json_stream(spark, DOC_SCHEMA, input_path, max_files_per_trigger),
+        checkpoint,
+        "spanmaint",
+        lambda df, batch_id, txn_app: extend_span_clean(
+            spark, df, out_path, batch_id, txn_app=txn_app
+        ),
+        compact=CompactionSpec(out_path, [CLEAN_TABLE, WINDOWS_TABLE], WINDOWS_TABLE, compact_every),
     )

@@ -55,7 +55,6 @@ protocol).
 
 from __future__ import annotations
 
-import hashlib
 import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
@@ -82,6 +81,7 @@ from ..operators.similarity import (
 )
 from ..sinks.snapshot import read_snapshot_pruned, write_snapshot
 from ..sinks.fsutil import json_meta_io
+from .compaction import CompactionSpec, read_json_stream, start_snapshot_stream
 from .curation import _snapshot_or_none
 
 EMB_SCHEMA = StructType(
@@ -298,39 +298,20 @@ def run_triplet_stream(
     *,
     max_files_per_trigger: int | None = None,
     compact_every: int | None = None,
-    compact_max_files: int | None = None,
 ):
     """Stream NDJSON embedding files (vec_id, label, embedding) through
     incremental triplet mining: exactly-once pairs / triplets / index
     snapshots.  ``compact_every=N`` re-clusters the snapshot tables
     after every N-th batch (replay-fenced, see
-    ``streaming/compaction``; ``compact_max_files=M`` instead triggers
-    on the index's live file count — the self-scaling form)."""
-    from .compaction import compact_twin_tables
-
-    reader = spark.readStream.schema(EMB_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(input_path)
-
-    app = "triplet-" + hashlib.md5(checkpoint.encode()).hexdigest()[:12]
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        extend_triplets(spark, batch_df, out_path, batch_id, txn_app=app)
-        compact_twin_tables(
-            spark,
-            out_path,
-            [PAIRS_TABLE, TRIPLETS_TABLE, INDEX_TABLE],
-            txn_app=app,
-            batch_id=batch_id,
-            canonical=INDEX_TABLE,
-            compact_every=compact_every,
-            max_live_files=compact_max_files,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    ``streaming/compaction``)."""
+    return start_snapshot_stream(
+        read_json_stream(spark, EMB_SCHEMA, input_path, max_files_per_trigger),
+        checkpoint,
+        "triplet",
+        lambda df, batch_id, txn_app: extend_triplets(
+            spark, df, out_path, batch_id, txn_app=txn_app
+        ),
+        compact=CompactionSpec(
+            out_path, [PAIRS_TABLE, TRIPLETS_TABLE, INDEX_TABLE], INDEX_TABLE, compact_every
+        ),
     )

@@ -30,12 +30,11 @@ Reference parity: the reference ships events append-only
 (qopcfdr_stream_loader.py); keyed convergent state is beyond-reference
 machinery for the training-data pipeline (SURVEY.md §6), composed from
 driver-verified parts (merge_into_snapshot, the txn fence, the
-compaction triggers).
+compaction scheduler).
 """
 
 from __future__ import annotations
 
-import hashlib
 import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,6 +45,7 @@ from ..sinks.snapshot import (
     merge_into_snapshot,
     write_snapshot,
 )
+from .compaction import CompactionSpec, read_json_stream, start_snapshot_stream
 
 ENTITIES_TABLE = "entities"
 
@@ -95,38 +95,16 @@ def run_upsert_stream(
     schema: str = UPSERT_SCHEMA,
     max_files_per_trigger: int | None = None,
     compact_every: int | None = None,
-    compact_max_files: int | None = None,
 ) -> StreamingQuery:
     """Stream NDJSON entity records through MERGE ingestion: one
     exactly-once snapshot table converging to the latest row per
     ``key``, last-writer-wins across micro-batches."""
-    from .compaction import compact_twin_tables
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(input_path)
-
-    app = "upsert-" + hashlib.md5(checkpoint.encode()).hexdigest()[:12]
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        apply_upsert_batch(
-            spark, batch_df, out_path, batch_id, key=key, txn_app=app
-        )
-        compact_twin_tables(
-            spark,
-            out_path,
-            [ENTITIES_TABLE],
-            txn_app=app,
-            batch_id=batch_id,
-            canonical=ENTITIES_TABLE,
-            compact_every=compact_every,
-            max_live_files=compact_max_files,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_snapshot_stream(
+        read_json_stream(spark, schema, input_path, max_files_per_trigger),
+        checkpoint,
+        "upsert",
+        lambda df, batch_id, txn_app: apply_upsert_batch(
+            spark, df, out_path, batch_id, key=key, txn_app=txn_app
+        ),
+        compact=CompactionSpec(out_path, [ENTITIES_TABLE], ENTITIES_TABLE, compact_every),
     )

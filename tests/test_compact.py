@@ -1,6 +1,6 @@
-"""Snapshot compaction of the streaming maintenance twins
-(streaming/compaction.py): crash-replay fencing, a bounded live file
-count over a long run, and the file-count trigger."""
+"""The streamed snapshot writers' one start path and compaction
+scheduler (streaming/compaction.py): each driver's writer identity,
+crash-replay fencing, and a bounded live file count over a long run."""
 
 from __future__ import annotations
 
@@ -195,58 +195,52 @@ def test_twin_compaction_bounds_live_files_long_run(spark, tmp_path):
     assert n_read < len(snapshot_files(spark, f"{compacted}/{WINDOWS_TABLE}"))
 
 
+def test_stream_writer_identities_pinned(spark, tmp_path, monkeypatch):
+    """Every streamed snapshot writer commits under the identity its
+    existing lakes' txn marks carry: "<prefix>-" + md5(checkpoint)[:12]
+    with the driver's own prefix.  A changed prefix would let a replay
+    into an existing lake commit twice.  Each driver's plan is built
+    but no stream starts."""
+    import hashlib
+    import importlib
 
-@pytest.mark.slow
-def test_twin_compaction_file_count_trigger(spark, tmp_path):
-    """max_live_files triggers compaction when the canonical table's
-    live file count reaches the threshold — the self-scaling cadence:
-    it fires when the manifest is crowded, regardless of batch number,
-    and stays quiet while the file count is bounded."""
-    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sinks.snapshot import (
-        read_snapshot,
-        snapshot_files,
-    )
-    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.streaming.compaction import (
-        compact_twin_tables,
-    )
-    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.streaming.spanmaint import (
-        CLEAN_TABLE,
-        WINDOWS_TABLE,
-        extend_span_clean,
+    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.streaming import (
+        compaction,
     )
 
-    out = str(tmp_path / "span")
-    app = "span-filecount-test"
-    threshold = 4
-    fired_at = []
-    for b in range(8):
-        batch = spark.createDataFrame(
-            [
-                (b * 4 + i, " ".join(f"f{b}x{i}n{j}" for j in range(45)))
-                for i in range(4)
-            ],
-            ["doc_id", "text"],
-        )
-        extend_span_clean(spark, batch, out, b, txn_app=app)
-        done = compact_twin_tables(
-            spark,
-            out,
-            [CLEAN_TABLE, WINDOWS_TABLE],
-            txn_app=app,
-            batch_id=b,
-            canonical=WINDOWS_TABLE,
-            max_live_files=threshold,
-        )
-        if done:
-            fired_at.append(b)
-        # the invariant the trigger exists for: the manifest never grows
-        # far past the threshold plus one batch's own appends (bounded
-        # loosely at 8 — appends-per-batch vary with parallelism)
-        n_live = len(snapshot_files(spark, f"{out}/{WINDOWS_TABLE}"))
-        assert n_live <= threshold + 8, (b, n_live)
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    (tmp_path / "src").mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    twin_args = (spark, src, out, ckpt)
+    drivers = [  # (prefix, module, driver, positional args)
+        ("stream", "pipeline", "run_stream", twin_args),
+        ("ewma", "ewma", "run_ewma_monitor", (spark, src, ckpt)),
+        ("sketch", "sketch_maintenance", "run_sketch_maintenance", twin_args),
+        ("pack", "packing", "run_packing_stream", twin_args),
+        ("upsert", "upsert", "run_upsert_stream", twin_args),
+        ("curate", "curation", "run_curation_stream", twin_args),
+        ("phash", "phashmaint", "run_phash_stream", twin_args),
+        ("spanmaint", "spanmaint", "run_span_stream", twin_args),
+        ("graphmaint", "graphmaint", "run_graph_stream", twin_args),
+        ("triplet", "tripletmaint", "run_triplet_stream", twin_args),
+        ("annmaint", "annmaint", "run_ann_stream", twin_args),
+        ("lm", "lmmaint", "run_lm_stream", twin_args),
+        ("export", "export", "run_export_stream", twin_args),
+    ]
+    seen: list[str] = []
+    identity = compaction.writer_identity
 
-    assert fired_at, "file-count trigger never fired"
-    # content is untouched by however many compactions fired
-    assert read_snapshot(spark, f"{out}/{WINDOWS_TABLE}").count() > 0
-    total = read_snapshot(spark, f"{out}/{CLEAN_TABLE}").count()
-    assert total == 32  # every doc of every batch, exactly once
+    def recording_identity(prefix, checkpoint):
+        seen.append(identity(prefix, checkpoint))
+        return seen[-1]
+
+    monkeypatch.setattr(compaction, "writer_identity", recording_identity)
+    monkeypatch.setattr(compaction, "_start", lambda *a: None)
+    digest = hashlib.md5(ckpt.encode()).hexdigest()[:12]
+    for prefix, module, name, args in drivers:
+        run = getattr(importlib.import_module(f"{compaction.__package__}.{module}"), name)
+        # the EWMA monitor commits snapshots only with an output path
+        kwargs = {"output_path": out} if prefix == "ewma" else {}
+        seen.clear()
+        assert run(*args, **kwargs) is None, prefix
+        assert seen == [f"{prefix}-{digest}"], prefix

@@ -475,17 +475,26 @@ def test_corrupt_gzip_file_aborts_and_skips(spark, tmp_path):
     assert n == len(FIXTURES) + 1  # all fixture lines + the corrupt LINE
 
 
-def test_exactly_once_commit_uri_base_path(spark, tmp_path):
+def test_exactly_once_commit_uri_base_path(spark, tmp_path, monkeypatch):
     """Regression: with a scheme-qualified base path (file:, standing in
     for s3a://hdfs://), the stream's snapshot commits must still match
     every staged file to its table root — a scheme-stripped comparison
-    would reject or drop the batch's files."""
+    would reject or drop the batch's files.  Without ``compact_every``
+    the compaction scheduler reads no manifest: its every snapshot call
+    raises here, and the batch still commits."""
     from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sinks.snapshot import (
         read_snapshot,
     )
     from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.streaming import (
+        compaction,
         run_stream,
     )
+
+    def no_manifest_read(*a, **kw):
+        raise AssertionError("a non-compacting batch touched the compactor")
+
+    for name in ("last_txn_version", "current_version", "compact_snapshot", "vacuum_snapshots"):
+        monkeypatch.setattr(compaction, name, no_manifest_read)
 
     src = write_fixture_files(str(tmp_path / "raw"))
     base = f"file:{tmp_path}/lake"

@@ -164,10 +164,10 @@ def test_snapshot_manifest_race_lost_to_marker(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_snapshot_soak_stream_with_concurrent_reader(spark, tmp_path):
+def test_snapshot_soak_stream_with_concurrent_reader(spark, tmp_path, monkeypatch):
     """SOAK: 12 identical micro-batches through run_stream
-    with inline compaction (every 3) and vacuum (every 4, age 0) while a
-    concurrent reader loop hammers read_snapshot on one table.  Invariants:
+    with inline compaction (every 3), each followed by vacuum (age 0),
+    while a concurrent reader loop hammers read_snapshot on one table.  Invariants:
     (a) every concurrent read sees a COMMITTED version — its count is an
     exact multiple of the per-batch count, never a torn intermediate;
     (b) observed counts are non-decreasing (append-only table);
@@ -176,6 +176,7 @@ def test_snapshot_soak_stream_with_concurrent_reader(spark, tmp_path):
     vacuum keeps the on-disk data-file population near the live set
     instead of 12 appends + 4 compaction generations — for the
     quarantine tables as well as the 13 OCSF tables."""
+    import functools
     import glob
     import json as _json
     import os
@@ -183,6 +184,9 @@ def test_snapshot_soak_stream_with_concurrent_reader(spark, tmp_path):
 
     from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sources.sample import (
         FIXTURES,
+    )
+    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.streaming import (
+        compaction,
     )
     from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.streaming.pipeline import (
         run_stream,
@@ -218,13 +222,18 @@ def test_snapshot_soak_stream_with_concurrent_reader(spark, tmp_path):
                 errors.append(e)
                 return
 
+    # vacuum reaps every unreferenced file, however young (default keep_last=2)
+    monkeypatch.setattr(
+        compaction,
+        "compact_twin_tables",
+        functools.partial(compaction.compact_twin_tables, vacuum_min_age_seconds=0.0),
+    )
     t = threading.Thread(target=reader, daemon=True)
     t.start()
     q = run_stream(
         spark, src, out, checkpoint=str(tmp_path / "ckpt"),
         max_files_per_trigger=1,
         compact_every=3,
-        vacuum_every=4, vacuum_keep_last=2, vacuum_min_age_seconds=0.0,
     )
     q.awaitTermination(600)
     stop.set()

@@ -124,7 +124,7 @@ def test_stream_snapshot_mode(spark, tmp_path):
     q = run_stream(
         spark, src, out, checkpoint=ckpt,
         max_files_per_trigger=1,
-        compact_every=4, vacuum_every=4, vacuum_min_age_seconds=0.0,
+        compact_every=4,
     )
     q.awaitTermination(300)
     assert not q.isActive
