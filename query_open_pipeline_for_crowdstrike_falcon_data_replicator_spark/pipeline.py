@@ -86,7 +86,6 @@ def process_batch(
     *,
     region: str = "us-east-1",
     account_id: str = "000000000000",
-    mode: str = "append",
 ) -> None:
     """Route one parsed batch to the 13 sinks + quarantine tables.
 
@@ -99,10 +98,9 @@ def process_batch(
             base_path,
             region=region,
             account_id=account_id,
-            mode=mode,
         )
         for key, df in sinks.items():  # the 4 quarantines
-            df.write.mode(mode).parquet(os.path.join(base_path, key))
+            df.write.mode("append").parquet(os.path.join(base_path, key))
 
 
 def run_batch(
@@ -112,7 +110,6 @@ def run_batch(
     *,
     region: str = "us-east-1",
     account_id: str = "000000000000",
-    mode: str = "append",
 ) -> None:
     """Batch/replay driver (the reference's 'copy objects into the bucket'
     workflow, README.md:78 — natively)."""
@@ -122,7 +119,6 @@ def run_batch(
         base_path,
         region=region,
         account_id=account_id,
-        mode=mode,
     )
 
 

@@ -228,7 +228,7 @@ def ocsf_etl_50k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = os.path.join(tempfile.gettempdir(), f"qopcfdr_etl_{n}")
     stage = f"{base}.stage-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    process_batch(spark, parse_fdr_lines(lines), stage, mode="overwrite")
+    process_batch(spark, parse_fdr_lines(lines), stage)
     publish_swap(stage, base)
     out = None
     for key in TABLE_KEYS:
@@ -311,7 +311,7 @@ def _build_verify_lake(spark: SparkSession) -> str:
     # overwrite (ADVICE r4), and the probe still re-runs its write path
     # every call (that IS what it verifies)
     stage = f"{base}.stage-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    process_batch(spark, parse_fdr_lines(lines), stage, mode="overwrite")
+    process_batch(spark, parse_fdr_lines(lines), stage)
     with open(os.path.join(stage, "_lake_built"), "w") as f:
         f.write(str(N_VERIFY))
     return publish_swap(stage, base)

@@ -37,7 +37,6 @@ def write_ocsf_tables(
     *,
     region: str = "us-east-1",
     account_id: str = "000000000000",
-    mode: str = "append",
 ) -> None:
     """13 partitioned GZIP-parquet writes, submitted CONCURRENTLY from
     driver threads (the reference's 13 Firehose streams also ran in
@@ -60,7 +59,7 @@ def write_ocsf_tables(
             .write.partitionBy(*PARTITION_COLS)
             .option("compression", "gzip")
             .option("maxRecordsPerFile", 5_000_000)
-            .mode(mode)
+            .mode("append")
             .parquet(os.path.join(base_path, key))
         )
 
@@ -68,31 +67,16 @@ def write_ocsf_tables(
         list(pool.map(_write, tables.items()))
 
 
-def register_ocsf_tables(
-    spark: SparkSession, base_path: str, table_keys: tuple[str, ...] = TABLE_KEYS
-) -> list[str]:
-    """Register the written sinks as queryable views plus a cross-class
-    ``ocsf_all`` union view — the Spark SQL replacement for the Glue
-    crawler + Athena entry point (S9/S10, reference README.md:48)."""
+def _register_views(read) -> list[str]:
+    """Register ``read(key)`` as a temp view per OCSF table (``read``
+    returns None for a missing table, which is skipped) plus the
+    cross-class ``ocsf_all`` union view; returns the registered names."""
     registered = []
     union_df = None
-    for key in table_keys:
-        path = os.path.join(base_path, key)
-        # probe via the reader, not os.path: base_path may be an object
-        # store / HDFS URI where local isdir() is always False.  Only a
-        # missing sink is skippable — a corrupt or unreadable table must
-        # fail loudly, not silently vanish from the ocsf_all union.
-        from pyspark.errors import AnalysisException
-
-        try:
-            df = spark.read.parquet(path)
-        except AnalysisException as ex:
-            if "PATH_NOT_FOUND" in str(ex) or "Path does not exist" in str(ex):
-                continue
-            raise
-        # partition-type inference turns eventDay=YYYYMMDD into int; pin the
-        # lakehouse contract (string, like the Firehose prefix)
-        df = df.withColumn("eventDay", F.col("eventDay").cast("string"))
+    for key in TABLE_KEYS:
+        df = read(key)
+        if df is None:
+            continue
         df.createOrReplaceTempView(key)
         registered.append(key)
         union_df = df if union_df is None else union_df.unionByName(
@@ -102,3 +86,27 @@ def register_ocsf_tables(
         union_df.createOrReplaceTempView("ocsf_all")
         registered.append("ocsf_all")
     return registered
+
+
+def register_ocsf_tables(spark: SparkSession, base_path: str) -> list[str]:
+    """Register the written sinks as queryable views plus a cross-class
+    ``ocsf_all`` union view — the Spark SQL replacement for the Glue
+    crawler + Athena entry point (S9/S10, reference README.md:48)."""
+    from pyspark.errors import AnalysisException
+
+    def read(key: str) -> DataFrame | None:
+        # probe via the reader, not os.path: base_path may be an object
+        # store / HDFS URI where local isdir() is always False.  Only a
+        # missing sink is skippable — a corrupt or unreadable table must
+        # fail loudly, not silently vanish from the ocsf_all union.
+        try:
+            df = spark.read.parquet(os.path.join(base_path, key))
+        except AnalysisException as ex:
+            if "PATH_NOT_FOUND" in str(ex) or "Path does not exist" in str(ex):
+                return None
+            raise
+        # partition-type inference turns eventDay=YYYYMMDD into int; pin the
+        # lakehouse contract (string, like the Firehose prefix)
+        return df.withColumn("eventDay", F.col("eventDay").cast("string"))
+
+    return _register_views(read)

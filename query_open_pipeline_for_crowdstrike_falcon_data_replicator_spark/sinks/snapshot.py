@@ -35,9 +35,16 @@ Protocol:
 * **Read**: load the latest (or any pinned) manifest and read exactly
   those files.  Concurrent writes/compactions are invisible until the
   reader re-plans — snapshot isolation, plus time travel for free.
-* **Compact**: rewrite the current snapshot's small files into few large
-  ones, commit as a new version.  Readers of older versions are
-  untouched; no window, no fencing.
+* **Rewrite** (MERGE, DELETE, compaction): one copy-on-write protocol,
+  ``_rewrite``.  From the head manifest it derives the files to
+  replace and the frame staged in their place (DELETE: the hit files'
+  surviving rows; MERGE: the hit files' unmatched rows plus the
+  source; compaction: every file, repartitioned or re-clustered), then
+  stages, carries every other file and its stats forward untouched,
+  and commits fenced on the version it derived from.  A concurrent
+  commit in between raises ``SnapshotConflictError`` and the rewrite
+  re-derives against the new head; a crash before the commit leaves
+  only orphans.  Readers of older versions are untouched; no window.
 * **Vacuum**: delete data files referenced by no retained manifest and
   older than a retention age (the age guard keeps an in-flight writer's
   not-yet-committed files safe, same rationale as Delta's
@@ -56,6 +63,7 @@ scale path for the same lake.
 
 from __future__ import annotations
 
+import bisect
 import json
 import posixpath
 import time
@@ -66,10 +74,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .fsutil import _fs, _jpath, _list_files, _qualified, _read_text
+from .parquet import _register_views
 
 _SNAP_DIR = "_snapshots"
 _DATA_DIR = "data"
 _COMMIT_RETRIES = 20
+# A keyed probe (``probe_snapshot``, MERGE's candidate prune) collects
+# at most this many distinct keys driver-side and plans from the
+# manifest's per-file [min, max].  Past it, B uniform keys saturate N
+# file ranges (expected hits N*(1-(1-1/N)^B)), so pruning buys nothing:
+# skip the collect and read every file, column-pruned.
+PRUNE_MAX_KEYS = 100_000
 # a manifest that exists but does not parse is a committer that died
 # mid-write; writers may reclaim its version slot only once it is this
 # old (a live writer finishes its ~KB write in milliseconds)
@@ -92,19 +107,28 @@ def _versions(spark: SparkSession, fs, path: str) -> list[int]:
     return sorted(out)
 
 
-def current_version(spark: SparkSession, path: str) -> int | None:
-    """Latest committed version, or None for a not-yet-created table.
-
-    Walks down past unparseable trailing manifests (a committer that died
-    mid-create-exclusive): readers see the last fully-committed state."""
+def _snapshot_head(
+    spark: SparkSession, path: str, version: int | None = None
+) -> tuple:
+    """``(fs, version, manifest)`` of the pinned ``version`` or, by
+    default, of the head: the newest manifest that parses.  Walks down
+    past unparseable trailing manifests (a committer that died
+    mid-create-exclusive): readers see the last fully-committed state.
+    ``(fs, None, None)`` for a not-yet-created table."""
     fs, _ = _fs(spark, path)
+    if version is not None:
+        return fs, version, _load_manifest(spark, fs, path, version)
     for v in reversed(_versions(spark, fs, path)):
         try:
-            _load_manifest(spark, fs, path, v)
+            return fs, v, _load_manifest(spark, fs, path, v)
         except ValueError:
             continue
-        return v
-    return None
+    return fs, None, None
+
+
+def current_version(spark: SparkSession, path: str) -> int | None:
+    """Latest committed version, or None for a not-yet-created table."""
+    return _snapshot_head(spark, path)[1]
 
 
 def _load_manifest(spark: SparkSession, fs, path: str, version: int) -> dict:
@@ -161,15 +185,20 @@ def _merge_schemas(prev: dict | None, new: dict | None) -> dict | None:
     return {**prev, "fields": fields}
 
 
-def _manifest_schema(manifest: dict):
-    """The manifest's recorded read schema as a StructType, or None for
-    tables created before schemas rode the manifest."""
-    raw = manifest.get("schema")
-    if raw is None:
-        return None
-    from pyspark.sql.types import StructType
+def _read_files(
+    spark: SparkSession, path: str, files: list[str], schema: dict | None
+) -> DataFrame:
+    """Read root-relative ``files`` under a manifest's recorded
+    ``schema`` (its json; None for tables created before schemas rode
+    the manifest).  The manifest's schema governs the read: files
+    written before a column was added surface NULL for it, with zero
+    footer reads at plan time (no mergeSchema pass)."""
+    reader = spark.read
+    if schema is not None:
+        from pyspark.sql.types import StructType
 
-    return StructType.fromJson(raw)
+        reader = reader.schema(StructType.fromJson(schema))
+    return reader.parquet(*[posixpath.join(path, f) for f in files])
 
 
 def _create_exclusive(spark: SparkSession, fs, path: str, text: str) -> bool:
@@ -212,12 +241,8 @@ def snapshot_files(
     spark: SparkSession, path: str, version: int | None = None
 ) -> list[str]:
     """The (root-relative) data files of a snapshot."""
-    fs, _ = _fs(spark, path)
-    if version is None:
-        version = current_version(spark, path)
-        if version is None:
-            return []
-    return _load_manifest(spark, fs, path, version)["files"]
+    manifest = _snapshot_head(spark, path, version)[2]
+    return [] if manifest is None else manifest["files"]
 
 
 def read_snapshot(
@@ -227,23 +252,18 @@ def read_snapshot(
 
     The returned DataFrame is pinned: concurrent appends, compactions,
     and (retention permitting) vacuums do not change what it reads."""
-    fs, _ = _fs(spark, path)
-    if version is None:
-        version = current_version(spark, path)
-    if version is None:
-        raise FileNotFoundError(f"no snapshot at {path} (version=None)")
-    manifest = _load_manifest(spark, fs, path, version)
-    files = manifest["files"]
-    if not files:
+    _, version, manifest = _snapshot_head(spark, path, version)
+    df = None if manifest is None else _read_pinned(spark, path, manifest)
+    if df is None:
         raise FileNotFoundError(f"no snapshot at {path} (version={version})")
-    reader = spark.read
-    schema = _manifest_schema(manifest)
-    if schema is not None:
-        # the manifest's schema governs the read: files written before a
-        # column was added surface NULL for it, with zero footer reads
-        # at plan time (no mergeSchema pass)
-        reader = reader.schema(schema)
-    return reader.parquet(*[posixpath.join(path, f) for f in files])
+    return df
+
+
+def read_snapshot_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+    """``read_snapshot`` of the head, or None for a not-yet-created (or
+    file-less) table — the first micro-batch of every maintenance twin."""
+    manifest = _snapshot_head(spark, path)[2]
+    return None if manifest is None else _read_pinned(spark, path, manifest)
 
 
 def snapshot_changes(
@@ -251,12 +271,11 @@ def snapshot_changes(
     path: str,
     from_version: int,
     to_version: int | None = None,
-    version_col: str = "_commit_version",
 ) -> DataFrame:
     """Incremental (CDC-style) read: the rows APPENDED after
     ``from_version`` up to and including ``to_version`` (default: the
-    current version), each tagged with the version of the commit that
-    introduced it.
+    current version), each tagged in ``_commit_version`` with the
+    version of the commit that introduced it.
 
     This is how a downstream consumer (a training job, an index
     maintainer) follows the table without rescanning it: the plan reads
@@ -281,7 +300,7 @@ def snapshot_changes(
     ``from_version=0`` means "since table creation".  A window whose
     appends were all vacuumed away fails at read time (retention
     governs how far back consumers may lag).  An empty window returns
-    an empty DataFrame with the table's schema plus ``version_col``.
+    an empty DataFrame with the table's schema plus ``_commit_version``.
     """
     fs, _ = _fs(spark, path)
     if to_version is None:
@@ -298,7 +317,7 @@ def snapshot_changes(
         if from_version > 0
         else set()
     )
-    added: list[tuple[int, list[str]]] = []
+    added: list[DataFrame] = []
     for v in range(from_version + 1, to_version + 1):
         m = _load_manifest(spark, fs, path, v)
         if "compacted_from" in m:
@@ -324,30 +343,166 @@ def snapshot_changes(
         new = [f for f in m["files"] if f not in prev]
         prev = set(m["files"])
         if new:
-            added.append((v, new, _manifest_schema(m)))
+            added.append(
+                _read_files(spark, path, new, m.get("schema")).withColumn(
+                    "_commit_version", F.lit(v).cast("long")
+                )
+            )
     if not added:
         base = read_snapshot(spark, path, to_version).limit(0)
-        return base.withColumn(version_col, F.lit(None).cast("long"))
-    parts = []
-    for v, new, schema in added:
-        reader = spark.read if schema is None else spark.read.schema(schema)
-        parts.append(
-            reader.parquet(
-                *[posixpath.join(path, f) for f in new]
-            ).withColumn(version_col, F.lit(v).cast("long"))
-        )
+        return base.withColumn("_commit_version", F.lit(None).cast("long"))
     # schema evolution inside the window: pre-evolution versions surface
     # NULL for later-added columns
     return reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), added
     )
 
 
-# a merge source whose distinct key set fits under this cap prunes the
-# candidate files manifest-level (the SPAN_PRUNE_MAX_KEYS rationale:
-# past saturation every file range matches and pruning buys nothing,
-# so above the cap we skip the collect and scan all files column-pruned)
-MERGE_PRUNE_MAX_KEYS = 100_000
+def _distinct_keys(keys_df: DataFrame) -> list | None:
+    """The distinct non-null values of ``keys_df``'s one column, or None
+    past ``PRUNE_MAX_KEYS`` — one bounded collect job.
+    NULL keys are dropped because every consumer matches with SQL
+    equality, where NULL never matches a row."""
+    col = F.col(keys_df.columns[0])
+    rows = (
+        keys_df.filter(col.isNotNull())
+        .distinct()
+        .limit(PRUNE_MAX_KEYS + 1)
+        .collect()
+    )
+    return None if len(rows) > PRUNE_MAX_KEYS else [r[0] for r in rows]
+
+
+def _overlapping(files: list[str], stats: dict, keys) -> list[str]:
+    """The ``files`` whose recorded [min, max] on the cluster column could
+    hold one of ``keys`` — manifest-level data skipping, no data read.
+
+    Files without stats are always kept (older unclustered appends stay
+    correct), and so are files with an all-NULL cluster column (bisect
+    cannot order None against real keys).  None keys are dropped
+    because every consumer probes with SQL equality, where NULL never
+    matches any row — NOT because NULL-keyed rows only live in
+    None-bounded files (a mixed file holding NULL and non-NULL keys
+    records a non-null [min,max], since min/max skip NULLs).  A future
+    null-safe (<=>) consumer must NOT rely on pruning to surface
+    NULL-keyed rows."""
+    ks = sorted(k for k in set(keys) if k is not None)
+    keep = []
+    for f in files:
+        rng = stats.get(f)
+        if rng is None or rng[0] is None or rng[1] is None:
+            keep.append(f)
+            continue
+        i = bisect.bisect_left(ks, rng[0])
+        if i < len(ks) and ks[i] <= rng[1]:
+            keep.append(f)
+    return keep
+
+
+def _read_pinned(
+    spark: SparkSession, path: str, manifest: dict, keys=None
+) -> DataFrame | None:
+    """Read a loaded manifest's files — only those that can hold one of
+    ``keys`` when given (``_overlapping``) — or None when no file is
+    left to read."""
+    files = manifest["files"]
+    if keys is not None:
+        files = _overlapping(files, manifest.get("stats", {}), keys)
+    return _read_files(spark, path, files, manifest.get("schema")) if files else None
+
+
+def _hit_files(
+    spark: SparkSession, path: str, manifest: dict, candidates: list[str],
+    match,
+) -> list[str]:
+    """The manifest files holding at least one row that ``match``
+    (DataFrame -> DataFrame: a filter or a semi-join) keeps, found by
+    one column-pruned scan of ``candidates``.
+
+    Each row's source file is pinned AT SCAN TIME as ``_src_file`` from
+    the scan's ``_metadata.file_path`` attribute: ``input_file_name()``
+    evaluates on post-exchange rows after a shuffled join and returns
+    '', and, being nondeterministic, it would also block the filter's
+    parquet pushdown (row-group stats make non-matching candidates
+    footer-cheap).  The distinct hit URIs collect to the driver —
+    bounded by the manifest's file count — and map back to the
+    manifest's root-relative data/<token>/part-*.parquet paths, unique
+    as suffixes."""
+    if not candidates:
+        return []
+    scan = _read_files(
+        spark, path, candidates, manifest.get("schema")
+    ).select("*", F.col("_metadata.file_path").alias("_src_file"))
+    uris = [
+        r._src_file
+        for r in match(scan).select("_src_file").distinct().collect()
+    ]
+    return [f for f in manifest["files"] if any(u.endswith(f) for u in uris)]
+
+
+def _rewrite(
+    spark: SparkSession,
+    path: str,
+    derive,
+    *,
+    txn_app: str | None = None,
+    txn_version: int | None = None,
+) -> int | None:
+    """The one fenced copy-on-write rewrite behind MERGE, DELETE and
+    compaction; returns the committed version, or None when nothing
+    was committed.
+
+    ``derive(fs, version, manifest)`` plans against the head manifest
+    and returns None (nothing to commit) or ``(replaced, frame, meta,
+    schema, n_files)``: the manifest files the rewrite replaces, the
+    frame staged in their place (through ``_stage_files``, clustered
+    on the table's cluster column, ``n_files`` files when non-zero),
+    the manifest meta, and the schema the new version records.  Every
+    file not replaced rides into the new manifest untouched — its data
+    and its stats.
+
+    The commit is fenced on the version the plan was derived from
+    (``_commit``'s ``expected_prev``): blindly taking the next slot
+    after a concurrent commit would silently drop that commit's rows.
+    On ``SnapshotConflictError`` the whole plan is re-derived against
+    the new head, up to 3 times.  ``txn_app``/``txn_version`` give the
+    rewrite ``write_snapshot``'s exactly-once fence."""
+    for retries_left in range(3, -1, -1):
+        fs, version, manifest = _snapshot_head(spark, path)
+        if version is None:
+            raise FileNotFoundError(f"no snapshot at {path}")
+        if txn_app is not None and int(
+            manifest.get("txn", {}).get(txn_app, -1)
+        ) >= int(txn_version):
+            return None  # cheap pre-check; _commit re-checks under the race
+        plan = derive(fs, version, manifest)
+        if plan is None:
+            return None
+        replaced, frame, meta, schema, n_files = plan
+        cluster_col = manifest.get("cluster_col")
+        new_files, new_stats = _stage_files(
+            spark, fs, frame, path, cluster_col, n_files
+        )
+        gone = set(replaced)
+        try:
+            return _commit(
+                spark,
+                fs,
+                path,
+                [f for f in manifest["files"] if f not in gone] + new_files,
+                mode="overwrite",
+                meta=meta,
+                txn_app=txn_app,
+                txn_version=txn_version,
+                # _commit keeps only the stats of the files it commits
+                stats={**manifest.get("stats", {}), **new_stats},
+                cluster_col=cluster_col,
+                schema=schema,
+                expected_prev=version,
+            )
+        except SnapshotConflictError:
+            if not retries_left:
+                raise
 
 
 def merge_into_snapshot(
@@ -359,7 +514,6 @@ def merge_into_snapshot(
     txn_app: str | None = None,
     txn_version: int | None = None,
     delete_col: str | None = None,
-    _retries: int = 3,
 ) -> int | None:
     """MERGE (upsert) ``source`` into a snapshot table by ``key``:
     target rows whose key appears in the source are REPLACED by the
@@ -375,15 +529,14 @@ def merge_into_snapshot(
     table.  A tombstone for a key the table doesn't hold is a no-op,
     as in SQL DELETE.
 
-    Copy-on-write at FILE grain, like ``delete_from_snapshot``: only
-    files holding a matched key are rewritten (their unmatched rows
-    survive alongside the full source); every other file rides into
-    the new manifest untouched.  When the table is CLUSTERED on the
-    merge key and the source's distinct keys fit under
-    ``MERGE_PRUNE_MAX_KEYS``, candidate files are pruned manifest-level
-    against the per-file [min, max] BEFORE any data is read — a
-    trickle upsert into a doc_id-clustered corpus opens ~batch-sized
-    file counts, not the table.
+    Copy-on-write at FILE grain (``_rewrite``): only files holding a
+    matched key are rewritten (their unmatched rows survive alongside
+    the full source); every other file rides into the new manifest
+    untouched.  When the table is CLUSTERED on the merge key and the
+    source's distinct keys fit under ``PRUNE_MAX_KEYS``, candidate
+    files are pruned manifest-level against the per-file [min, max]
+    BEFORE any data is read — a trickle upsert into a doc_id-clustered
+    corpus opens ~batch-sized file counts, not the table.
 
     The source must be key-unique (duplicate source keys make the
     result order-dependent; that raises).  Duplicate TARGET keys are
@@ -398,87 +551,8 @@ def merge_into_snapshot(
     keys = [key] if isinstance(key, str) else list(key)
     if delete_col is not None and delete_col in keys:
         raise ValueError(f"delete_col {delete_col!r} cannot be a merge key")
-    fs, _ = _fs(spark, path)
-    version = current_version(spark, path)
-    if version is None:
-        raise FileNotFoundError(f"no snapshot at {path}")
     if txn_app is not None and txn_version is None:
         raise ValueError("txn_app requires txn_version")
-    if txn_app is not None and last_txn_version(spark, path, txn_app) >= int(
-        txn_version or 0
-    ):
-        return None  # cheap pre-check; _commit re-checks under the race
-    manifest = _load_manifest(spark, fs, path, version)
-    files = manifest["files"]
-    stats = manifest.get("stats", {})
-    cluster_col = manifest.get("cluster_col")
-    schema = _manifest_schema(manifest)
-    if (
-        source.groupBy(*keys)
-        .count()
-        .filter(F.col("count") > 1)
-        .limit(1)
-        .count()
-    ):
-        raise ValueError(
-            f"merge source has duplicate keys on {keys}; the result "
-            f"would be order-dependent"
-        )
-    candidates = files
-    proven_small = False  # true only when the collect BOUNDED the keys
-    if len(keys) == 1 and keys[0] == cluster_col and stats:
-        import bisect
-
-        rows = (
-            source.select(cluster_col)
-            .distinct()
-            .limit(MERGE_PRUNE_MAX_KEYS + 1)
-            .collect()
-        )
-        if len(rows) <= MERGE_PRUNE_MAX_KEYS:
-            proven_small = True
-            # NULL keys never equality-match a target row, so dropping
-            # them from the prune set is exact (read_snapshot_pruned's
-            # argument verbatim)
-            ks = sorted(r[0] for r in rows if r[0] is not None)
-            candidates = []
-            for f in files:
-                rng = stats.get(f)
-                if rng is None or rng[0] is None or rng[1] is None:
-                    candidates.append(f)
-                    continue
-                i = bisect.bisect_left(ks, rng[0])
-                if i < len(ks) and ks[i] <= rng[1]:
-                    candidates.append(f)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    # src_keys is a DERIVED table: Catalyst's post-distinct size estimate
-    # can be far off, and a misestimated plan-time broadcast of a bulk
-    # source OOMs (the LM count-join lesson).  Broadcast ONLY when the
-    # prune-collect has PROVEN the key set small; otherwise ride a
-    # spillable shuffled join
-    src_keys = source.select(*keys).distinct()
-    src_keys = (
-        F.broadcast(src_keys)
-        if proven_small
-        else src_keys.hint("shuffle_hash")
-    )
-    hit: list[str] = []
-    if candidates:
-        scan = reader.parquet(
-            *[posixpath.join(path, f) for f in candidates]
-        ).withColumn(
-            # pinned AT SCAN TIME: after a shuffled join input_file_name()
-            # evaluates on post-exchange rows and returns ''
-            "_src_file", F.input_file_name()
-        )
-        hit_uris = [
-            r._src_file
-            for r in scan.join(src_keys, keys, "left_semi")
-            .select("_src_file")
-            .distinct()
-            .collect()  # bounded by the manifest's file count
-        ]
-        hit = [f for f in files if any(u.endswith(f) for u in hit_uris)]
     live = source
     if delete_col is not None:
         # tombstones match (and thereby delete) but are never inserted,
@@ -486,48 +560,59 @@ def merge_into_snapshot(
         live = source.filter(
             ~F.coalesce(F.col(delete_col), F.lit(False))
         ).drop(delete_col)
-    if hit:
-        survivors = reader.parquet(
-            *[posixpath.join(path, f) for f in hit]
-        ).join(src_keys, keys, "left_anti")
-        staged_df = survivors.unionByName(live, allowMissingColumns=True)
-    else:
-        staged_df = live  # pure insert
-    new_files, new_stats = _stage_files(spark, fs, staged_df, path, cluster_col)
-    kept = [f for f in files if f not in set(hit)]
-    kept_stats = {f: s for f, s in stats.items() if f in set(kept)}
-    kept_stats.update(new_stats or {})
-    merged_schema = (
-        _merge_schemas(manifest.get("schema"), live.schema.jsonValue())
-        if manifest.get("schema") is not None
-        else None  # pre-schema tables stay legacy (see _commit)
+
+    def derive(fs, version, manifest):
+        if (
+            source.groupBy(*keys)
+            .count()
+            .filter(F.col("count") > 1)
+            .limit(1)
+            .count()
+        ):
+            raise ValueError(
+                f"merge source has duplicate keys on {keys}; the result "
+                f"would be order-dependent"
+            )
+        schema = manifest.get("schema")
+        candidates = manifest["files"]
+        small = None  # the source's keys, only when the collect BOUNDED them
+        if keys == [manifest.get("cluster_col")] and manifest.get("stats"):
+            small = _distinct_keys(source.select(*keys))
+            if small is not None:
+                candidates = _overlapping(candidates, manifest["stats"], small)
+        # src_keys is a DERIVED table: Catalyst's post-distinct size
+        # estimate can be far off, and a misestimated plan-time broadcast
+        # of a bulk source OOMs (the LM count-join lesson).  Broadcast
+        # ONLY when the prune-collect has PROVEN the key set small;
+        # otherwise ride a spillable shuffled join
+        src_keys = source.select(*keys).distinct()
+        src_keys = (
+            F.broadcast(src_keys)
+            if small is not None
+            else src_keys.hint("shuffle_hash")
+        )
+        hit = _hit_files(
+            spark, path, manifest, candidates,
+            lambda scan: scan.join(src_keys, keys, "left_semi"),
+        )
+        staged = live  # pure insert unless a file holds a matched key
+        if hit:
+            staged = (
+                _read_files(spark, path, hit, schema)
+                .join(src_keys, keys, "left_anti")
+                .unionByName(live, allowMissingColumns=True)
+            )
+        merged_schema = (
+            _merge_schemas(schema, live.schema.jsonValue())
+            if schema is not None
+            else None  # pre-schema tables stay legacy (see _commit)
+        )
+        meta = {"merged_from": version, "merge_key": keys}
+        return hit, staged, meta, merged_schema, 0
+
+    return _rewrite(
+        spark, path, derive, txn_app=txn_app, txn_version=txn_version
     )
-    try:
-        return _commit(
-            spark,
-            fs,
-            path,
-            kept + new_files,
-            mode="overwrite",
-            meta={"merged_from": version, "merge_key": keys},
-            txn_app=txn_app,
-            txn_version=txn_version,
-            stats=kept_stats,
-            cluster_col=cluster_col,
-            schema=merged_schema,
-            expected_prev=version,
-        )
-    except SnapshotConflictError:
-        # a concurrent commit landed between our manifest read and our
-        # commit; blindly taking the next slot would drop its rows —
-        # re-derive the whole merge against the new head
-        if _retries <= 0:
-            raise
-        return merge_into_snapshot(
-            spark, path, source, key,
-            txn_app=txn_app, txn_version=txn_version,
-            delete_col=delete_col, _retries=_retries - 1,
-        )
 
 
 def delete_from_snapshot(
@@ -535,12 +620,11 @@ def delete_from_snapshot(
     path: str,
     predicate: str,
     cluster_range: tuple | None = None,
-    _retries: int = 3,
 ) -> int | None:
     """Row-level delete (the right-to-be-forgotten path): commit a new
     version with every row matching ``predicate`` removed, rewriting
     ONLY the files that hold matching rows — copy-on-write at file
-    grain, the Delta/Iceberg DELETE strategy.
+    grain (``_rewrite``), the Delta/Iceberg DELETE strategy.
 
     Plan: (1) candidate files — all of them, unless the table is
     clustered and ``cluster_range=(lo, hi)`` bounds the predicate on
@@ -565,70 +649,33 @@ def delete_from_snapshot(
 
     ``predicate`` is a SQL expression string, so the operation is
     oracle-replayable verbatim on any engine."""
-    fs, _ = _fs(spark, path)
-    version = current_version(spark, path)
-    if version is None:
-        raise FileNotFoundError(f"no snapshot at {path}")
-    manifest = _load_manifest(spark, fs, path, version)
-    files = manifest["files"]
-    stats = manifest.get("stats", {})
-    cluster_col = manifest.get("cluster_col")
-    candidates = files
-    if cluster_range is not None and cluster_col is not None and stats:
-        lo, hi = cluster_range
-        candidates = [
-            f
-            for f in files
-            if (rng := stats.get(f)) is None
-            or rng[0] is None
-            or rng[1] is None
-            or (rng[0] <= hi and lo <= rng[1])
-        ]
-    if not candidates:
-        return None
     pred = F.expr(predicate)
-    schema = _manifest_schema(manifest)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    scan = reader.parquet(*[posixpath.join(path, f) for f in candidates])
-    hit_uris = [
-        r.f
-        for r in scan.filter(pred)
-        .select(F.input_file_name().alias("f"))
-        .distinct()
-        .collect()  # bounded by the manifest's file count
-    ]
-    # input_file_name() yields absolute URIs; manifest paths are
-    # root-relative data/<token>/part-*.parquet — unique as suffixes
-    hit = [f for f in files if any(u.endswith(f) for u in hit_uris)]
-    if not hit:
-        return None
-    survivors = reader.parquet(
-        *[posixpath.join(path, f) for f in hit]
-    ).filter(~F.coalesce(pred, F.lit(False)))
-    new_files, new_stats = _stage_files(spark, fs, survivors, path, cluster_col)
-    kept = [f for f in files if f not in set(hit)]
-    kept_stats = {f: s for f, s in stats.items() if f in set(kept)}
-    kept_stats.update(new_stats or {})
-    try:
-        return _commit(
-            spark,
-            fs,
-            path,
-            kept + new_files,
-            mode="overwrite",
-            meta={"deleted_from": version, "predicate": predicate},
-            stats=kept_stats,
-            cluster_col=cluster_col,
-            schema=manifest.get("schema"),
-            expected_prev=version,
+
+    def derive(fs, version, manifest):
+        stats = manifest.get("stats", {})
+        candidates = manifest["files"]
+        if cluster_range is not None and manifest.get("cluster_col") and stats:
+            lo, hi = cluster_range
+            candidates = [
+                f
+                for f in candidates
+                if (rng := stats.get(f)) is None
+                or rng[0] is None
+                or rng[1] is None
+                or (rng[0] <= hi and lo <= rng[1])
+            ]
+        hit = _hit_files(
+            spark, path, manifest, candidates, lambda scan: scan.filter(pred)
         )
-    except SnapshotConflictError:
-        # see merge_into_snapshot: re-derive against the new head
-        if _retries <= 0:
-            raise
-        return delete_from_snapshot(
-            spark, path, predicate, cluster_range, _retries=_retries - 1
-        )
+        if not hit:
+            return None
+        survivors = _read_files(
+            spark, path, hit, manifest.get("schema")
+        ).filter(~F.coalesce(pred, F.lit(False)))
+        meta = {"deleted_from": version, "predicate": predicate}
+        return hit, survivors, meta, manifest.get("schema"), 0
+
+    return _rewrite(spark, path, derive)
 
 
 def _footer_cluster_stats(
@@ -713,7 +760,8 @@ def _stage_files(
     sorted by that column (``sinks/layout.write_clustered``'s layout at
     snapshot granularity) and each file's [min, max] on it is recorded —
     the manifest-level pruning index ``read_snapshot_pruned`` plans
-    from."""
+    from.  A non-zero ``n_files`` repartitions ``df`` into that many
+    files first (by range when clustered)."""
     token = uuid.uuid4().hex[:12]
     out_dir = posixpath.join(path, _DATA_DIR, token)
     if cluster_col is not None:
@@ -724,7 +772,7 @@ def _stage_files(
         )
         parted.sortWithinPartitions(cluster_col).write.parquet(out_dir)
     else:
-        df.write.parquet(out_dir)
+        (df.repartition(n_files) if n_files else df).write.parquet(out_dir)
     prefix = _qualified(spark, fs, path).rstrip("/") + "/"
     rels = []
     for f in _list_files(spark, fs, out_dir):
@@ -745,8 +793,6 @@ def _stage_files(
         if footer is not None:
             stats = footer
         else:
-            from pyspark.sql import functions as F
-
             rows = (
                 spark.read.parquet(out_dir)
                 .select(
@@ -770,11 +816,10 @@ def last_txn_version(spark: SparkSession, path: str, txn_app: str) -> int:
     table, or -1.  Manifests carry the per-writer high-water-mark map
     forward on every commit (Delta's ``txn`` action), so one manifest
     read answers the idempotence question on micro-batch replay."""
-    fs, _ = _fs(spark, path)
-    v = current_version(spark, path)
-    if v is None:
+    manifest = _snapshot_head(spark, path)[2]
+    if manifest is None:
         return -1
-    return int(_load_manifest(spark, fs, path, v).get("txn", {}).get(txn_app, -1))
+    return int(manifest.get("txn", {}).get(txn_app, -1))
 
 
 class SnapshotConflictError(Exception):
@@ -857,7 +902,8 @@ def _commit(
         )
         prev_stats.update(stats or {})
         all_files = base + new_files
-        merged_stats = {f: s for f, s in prev_stats.items() if f in set(all_files)}
+        live = set(all_files)
+        merged_stats = {f: s for f, s in prev_stats.items() if f in live}
         prev_cluster = (
             prev_manifest.get("cluster_col")
             if prev is not None and mode == "append"
@@ -959,44 +1005,36 @@ def read_snapshot_pruned(
     keys against a corpus-sized index).
 
     Files without recorded stats are always read (older unclustered
-    appends stay correct).  Returns None when no file can match or the
-    table does not exist.  Pruning power is regime-dependent and honest:
-    with B distinct uniform keys against N file ranges the expected hit
-    count is N*(1-(1-1/N)^B) — a trickle batch (B << N) reads ~B files;
-    a bulk batch saturates the ranges and degrades to the full (column-
-    pruned, embarrassingly parallel) scan the module always paid."""
-    import bisect
+    appends stay correct; see ``_overlapping``).  Returns None when no
+    file can match or the table does not exist.  Pruning power is
+    regime-dependent and honest: with B distinct uniform keys against N
+    file ranges the expected hit count is N*(1-(1-1/N)^B) — a trickle
+    batch (B << N) reads ~B files; a bulk batch saturates the ranges and
+    degrades to the full (column-pruned, embarrassingly parallel) scan
+    the module always paid."""
+    manifest = _snapshot_head(spark, path, version)[2]
+    return None if manifest is None else _read_pinned(spark, path, manifest, keys)
 
-    fs, _ = _fs(spark, path)
-    if version is None:
-        version = current_version(spark, path)
-        if version is None:
-            return None
-    manifest = _load_manifest(spark, fs, path, version)
-    stats = manifest.get("stats", {})
-    # None keys are dropped because every consumer probes with SQL
-    # equality, where NULL never matches any row — NOT because
-    # NULL-keyed rows only live in None-bounded files (a mixed file
-    # holding NULL and non-NULL keys records a non-null [min,max],
-    # since min/max skip NULLs).  A future null-safe (<=>) consumer
-    # must NOT rely on pruning to surface NULL-keyed rows.
-    ks = sorted(k for k in set(keys) if k is not None)
-    keep = []
-    for f in manifest["files"]:
-        rng = stats.get(f)
-        if rng is None or rng[0] is None or rng[1] is None:
-            # no stats, or an all-NULL cluster column (bisect cannot
-            # order None against real keys): never prune
-            keep.append(f)
-            continue
-        i = bisect.bisect_left(ks, rng[0])
-        if i < len(ks) and ks[i] <= rng[1]:
-            keep.append(f)
-    if not keep:
+
+def probe_snapshot(
+    spark: SparkSession, path: str, keys_df: DataFrame
+) -> DataFrame | None:
+    """The keyed probe every maintenance twin runs against its
+    corpus-sized index: the snapshot rows that could match the distinct
+    non-null values of ``keys_df``'s one column.
+
+    Returns None for a not-yet-created table or when there is no key.
+    Up to ``PRUNE_MAX_KEYS`` keys collect driver-side in one bounded job
+    (they ship there for the batch side's broadcast join anyway) and
+    the read plans from the manifest's per-file [min, max]
+    (``read_snapshot_pruned``); past the cap the collect is skipped and
+    the whole pinned snapshot is read, column-pruned.  Pruning is a
+    read optimization only: both regimes match the same rows."""
+    manifest = _snapshot_head(spark, path)[2]
+    if manifest is None:
         return None
-    schema = _manifest_schema(manifest)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(*[posixpath.join(path, f) for f in keep])
+    keys = _distinct_keys(keys_df)  # None: past the cap, read every file
+    return None if keys == [] else _read_pinned(spark, path, manifest, keys)
 
 
 def compact_snapshot(
@@ -1004,18 +1042,16 @@ def compact_snapshot(
     path: str,
     *,
     target_files: int = 0,
-    target_file_bytes: int = 128 * 1024 * 1024,
     transform=None,
-    _retries: int = 3,
 ) -> int:
     """Rewrite the current snapshot into ~``target_files`` larger files
-    and commit the result as a new version.  No reader is disturbed:
-    in-flight queries keep their pinned file list, and time travel to
-    pre-compaction versions still works until vacuum.
+    and commit the result as a new version (``_rewrite`` with every file
+    replaced).  No reader is disturbed: in-flight queries keep their
+    pinned file list, and time travel to pre-compaction versions still
+    works until vacuum.
 
     ``target_files=0`` sizes the output from the snapshot's total bytes
-    at ``target_file_bytes`` per file (the 128 MB default matches the
-    reference Firehose buffer ceiling).
+    at 128 MB per file (the reference Firehose buffer ceiling).
 
     ``transform`` (DataFrame -> DataFrame) is applied to the unioned
     read before restaging — MERGE-ON-READ compaction for tables whose
@@ -1023,89 +1059,45 @@ def compact_snapshot(
     tables fold duplicates with a groupBy-sum here).  The transform
     must be a pure fold: idempotent on already-folded data, preserving
     the readers' merge semantics, or readers of pre- and post-compaction
-    versions would disagree."""
-    fs, _ = _fs(spark, path)
-    version = current_version(spark, path)
-    if version is None:
-        raise FileNotFoundError(f"no snapshot at {path}")
-    manifest = _load_manifest(spark, fs, path, version)
-    files = manifest["files"]
-    cluster_col = manifest.get("cluster_col")
-    if target_files <= 0:
-        total = sum(
-            fs.getFileStatus(_jpath(spark, posixpath.join(path, f))).getLen()
-            for f in files
-        )
-        target_files = max(1, -(-total // target_file_bytes))
-    reader = spark.read
-    schema = _manifest_schema(manifest)
-    if schema is not None:
-        reader = reader.schema(schema)  # evolution-aware union read
-    df = reader.parquet(*[posixpath.join(path, f) for f in files])
-    if transform is not None:
-        df = transform(df)
-    if cluster_col is not None:
-        # a clustered table compacts CLUSTERED: per-batch appends each
-        # cover the whole key range, so compaction is precisely when the
-        # ranges become disjoint again (and the pruning index tightens)
-        new_files, stats = _stage_files(
-            spark, fs, df, path, cluster_col, n_files=target_files
-        )
-    else:
-        new_files, stats = _stage_files(spark, fs, df.repartition(target_files), path)
-    try:
-        return _commit(
-            spark,
-            fs,
-            path,
-            new_files,
-            mode="overwrite",
-            meta={"compacted_from": version},
-            stats=stats,
-            cluster_col=cluster_col,
-            schema=df.schema.jsonValue() if schema is not None else None,
-            expected_prev=version,
-        )
-    except SnapshotConflictError:
-        # a concurrent append landed mid-compaction; committing our
-        # pre-append file list would drop its rows — recompact the head
-        if _retries <= 0:
-            raise
-        return compact_snapshot(
-            spark, path, target_files=target_files,
-            target_file_bytes=target_file_bytes, transform=transform,
-            _retries=_retries - 1,
-        )
+    versions would disagree.
+
+    A clustered table compacts CLUSTERED: per-batch appends each cover
+    the whole key range, so compaction is precisely when the ranges
+    become disjoint again (and the pruning index tightens)."""
+
+    def derive(fs, version, manifest):
+        files = manifest["files"]
+        n_files = target_files
+        if n_files <= 0:
+            total = sum(
+                fs.getFileStatus(
+                    _jpath(spark, posixpath.join(path, f))
+                ).getLen()
+                for f in files
+            )
+            n_files = max(1, -(-total // (128 * 1024 * 1024)))
+        schema = manifest.get("schema")
+        df = _read_files(spark, path, files, schema)
+        if transform is not None:
+            df = transform(df)
+        if schema is not None:
+            schema = df.schema.jsonValue()
+        return files, df, {"compacted_from": version}, schema, n_files
+
+    return _rewrite(spark, path, derive)
 
 
-def register_snapshot_tables(
-    spark: SparkSession,
-    base_path: str,
-    table_keys: tuple[str, ...] | None = None,
-) -> list[str]:
+def register_snapshot_tables(spark: SparkSession, base_path: str) -> list[str]:
     """S9/S10 parity for snapshot-committed lakes: register every OCSF
     snapshot table as a temp view plus the cross-class ``ocsf_all`` union
     view — the same query surface ``sinks/parquet.register_ocsf_tables``
     provides for directory tables, but planned from manifests (each view
     is a pinned snapshot: re-register to see later versions)."""
-    from ..ocsf.schemas import TABLE_KEYS
-
-    registered: list[str] = []
-    union_df = None
-    for key in table_keys or TABLE_KEYS:
-        path = posixpath.join(base_path, key)
-        if current_version(spark, path) is None:
-            continue
-        df = read_snapshot(spark, path)
-        df.createOrReplaceTempView(key)
-        registered.append(key)
-        union_df = df if union_df is None else union_df.unionByName(
-            df, allowMissingColumns=True
+    return _register_views(
+        lambda key: read_snapshot_or_none(
+            spark, posixpath.join(base_path, key)
         )
-    if union_df is not None:
-        union_df.createOrReplaceTempView("ocsf_all")
-        registered.append("ocsf_all")
-    return registered
+    )
 
 
 def vacuum_snapshots(

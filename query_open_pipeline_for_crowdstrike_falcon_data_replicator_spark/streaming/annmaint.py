@@ -70,10 +70,13 @@ from ..operators.similarity import (
     assign_cells,
     ivf_probe_cells,
 )
-from ..sinks.snapshot import read_snapshot_pruned, write_snapshot
+from ..sinks.snapshot import (
+    read_snapshot_or_none,
+    read_snapshot_pruned,
+    write_snapshot,
+)
 from ..sinks.fsutil import json_meta_io
 from .compaction import CompactionSpec, read_json_stream, start_snapshot_stream
-from .curation import _snapshot_or_none
 
 EMB_SCHEMA = StructType(
     [
@@ -223,7 +226,7 @@ def extend_ann_index(
                 # set is overwrite-invariant — the replay argument in
                 # the docstring)
                 drifted = True
-                prior_full = _snapshot_or_none(spark, index_path)
+                prior_full = read_snapshot_or_none(spark, index_path)
                 union = batch.select("vec_id", "u")
                 if prior_full is not None:
                     union = prior_full.select(

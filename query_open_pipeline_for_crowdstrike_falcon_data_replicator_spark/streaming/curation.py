@@ -31,7 +31,7 @@ skips.  At 100 TB the bands table is the pre-built index shape the
 batch probes by bucket: it is WRITTEN clustered by band key
 (``write_snapshot(cluster_col="key")``), the manifest carries per-file
 [min, max] on the key, and a trickle batch's probe is planned from
-those stats (``read_snapshot_pruned``) — reading ~B of the index's N
+those stats (``probe_snapshot``) — reading ~B of the index's N
 files; bulk batches saturate the ranges and keep the full column-pruned
 scan.
 
@@ -63,9 +63,8 @@ from ..operators.text import (
     _tokens,
 )
 from ..sinks.snapshot import (
-    current_version,
-    read_snapshot,
-    read_snapshot_pruned,
+    probe_snapshot,
+    read_snapshot_or_none,
     write_snapshot,
 )
 from .compaction import CompactionSpec, read_json_stream, start_snapshot_stream
@@ -77,21 +76,6 @@ DOC_SCHEMA = StructType(
 DOCS_TABLE = "docs"
 BANDS_TABLE = "index/bands"
 PROFILES_TABLE = "index/profiles"
-
-# Same trickle-regime gate as spanmaint.SPAN_PRUNE_MAX_KEYS: a batch's
-# distinct band keys (docs x BANDS) collect driver-side — they ship
-# there for the broadcast probe anyway — and the bands-index read plans
-# from the manifest's per-file [min, max].
-BAND_PRUNE_MAX_KEYS = 100_000
-
-
-def _snapshot_or_none(
-    spark: SparkSession, path: str
-) -> DataFrame | None:
-    if current_version(spark, path) is None:
-        return None
-    return read_snapshot(spark, path)
-
 
 def _exact_jaccard(pairs: DataFrame, sh_a: DataFrame, sh_b: DataFrame) -> DataFrame:
     """Verify candidate (a_doc, b_doc) pairs by exact Jaccard over the
@@ -154,31 +138,20 @@ def curate_batch(
         # NEVER the corpus-sized fingerprint set (a plan-time broadcast
         # of the corpus is the OOM-at-scale pattern; spanmaint's `seen`
         # shape applied here)
-        corpus_profiles = _snapshot_or_none(spark, profiles_path)
-        if corpus_profiles is not None:
-            batch_fps = pre.select("fingerprint").distinct()
-            if batch_fps.count() <= BAND_PRUNE_MAX_KEYS:
-                fps_src = read_snapshot_pruned(
-                    spark,
-                    profiles_path,
-                    [r["fingerprint"] for r in batch_fps.collect()],
-                )
-            else:
-                fps_src = corpus_profiles
-            if fps_src is not None:
-                dup_fps = (
-                    fps_src.select("fingerprint")
-                    .join(F.broadcast(batch_fps), "fingerprint", "left_semi")
-                    .persist()
-                )
-                dup_fps.count()
-                passed = pre.join(
-                    F.broadcast(dup_fps), "fingerprint", "left_anti"
-                ).persist()
-            else:
-                passed = pre
-        else:
-            passed = pre
+        corpus_profiles = read_snapshot_or_none(spark, profiles_path)
+        batch_fps = pre.select("fingerprint").distinct()
+        fps_src = probe_snapshot(spark, profiles_path, batch_fps)
+        passed = pre
+        if fps_src is not None:
+            dup_fps = (
+                fps_src.select("fingerprint")
+                .join(F.broadcast(batch_fps), "fingerprint", "left_semi")
+                .persist()
+            )
+            dup_fps.count()
+            passed = pre.join(
+                F.broadcast(dup_fps), "fingerprint", "left_anti"
+            ).persist()
 
         # gate 3: near-dup LSH.  One profile pass over the survivors.
         profiles = minhash_profiles(
@@ -208,16 +181,10 @@ def curate_batch(
         ).select(F.col("b_doc").alias("doc_id"))
 
         # 3b against the corpus: batch bands broadcast into the index join
-        # (planned from the manifest's per-file key stats when the batch
-        # is small enough to be worth the driver-side key collect)
-        batch_keys = bands.select("key").distinct()
-        n_keys = batch_keys.count()
-        if n_keys <= BAND_PRUNE_MAX_KEYS:
-            corpus_bands = read_snapshot_pruned(
-                spark, bands_path, [r["key"] for r in batch_keys.collect()]
-            )
-        else:
-            corpus_bands = _snapshot_or_none(spark, bands_path)
+        # (planned from the manifest's per-file key stats when the batch's
+        # distinct band keys, docs x BANDS, fit under
+        # snapshot.PRUNE_MAX_KEYS)
+        corpus_bands = probe_snapshot(spark, bands_path, bands.select("key"))
         if corpus_bands is not None and corpus_profiles is not None:
             cand_vs = (
                 corpus_bands.alias("c")

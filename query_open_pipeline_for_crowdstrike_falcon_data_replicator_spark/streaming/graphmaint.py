@@ -60,9 +60,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import lsh_bands, minhash_profiles, postings_of
-from ..sinks.snapshot import write_snapshot
+from ..sinks.snapshot import read_snapshot_or_none, write_snapshot
 from .compaction import CompactionSpec, read_json_stream, start_snapshot_stream
-from .curation import DOC_SCHEMA, _exact_jaccard, _snapshot_or_none
+from .curation import DOC_SCHEMA, _exact_jaccard
 
 PAIRS_TABLE = "pairs"
 BANDS_TABLE = "index/bands"
@@ -115,8 +115,8 @@ def extend_pair_graph(
         )
 
         # batch-vs-corpus: batch bands broadcast into the index join
-        corpus_bands = _snapshot_or_none(spark, bands_path)
-        corpus_profiles = _snapshot_or_none(spark, profiles_path)
+        corpus_bands = read_snapshot_or_none(spark, bands_path)
+        corpus_profiles = read_snapshot_or_none(spark, profiles_path)
         if corpus_bands is not None and corpus_profiles is not None:
             cand_vs = (
                 corpus_bands.alias("c")

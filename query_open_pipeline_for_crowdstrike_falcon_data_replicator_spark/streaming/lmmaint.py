@@ -28,7 +28,7 @@ rows.  The unigram fold reads the whole table — vocabulary-bounded
 (total, vocab) scalars; the BIGRAM table — the corpus-combinatorial one
 (49M distinct trigrams at the 1M-doc probe for its order-3 sibling) —
 is pruned to the batch's distinct ``prev`` keys through the clustered
-manifest stats (``read_snapshot_pruned``), so a trickle batch reads
+manifest stats (``probe_snapshot``), so a trickle batch reads
 ~its own key count of files, never the model (the spanmaint
 trickle-regime mechanics; the key list is batch-bounded, like
 spanmaint's window hashes).
@@ -66,9 +66,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..operators.text import _lm_backoff_expr, _ngram_positions
-from ..sinks.snapshot import read_snapshot, read_snapshot_pruned, write_snapshot
+from ..sinks.snapshot import probe_snapshot, read_snapshot, write_snapshot
 from .compaction import CompactionSpec, read_json_stream, start_snapshot_stream
-from .spanmaint import SPAN_PRUNE_MAX_KEYS as LM_PRUNE_MAX_KEYS
 
 DOC_SCHEMA = StructType(
     [
@@ -253,35 +252,16 @@ def extend_lm(
         uni = fold_unigrams(read_snapshot(spark, uni_path)).persist()
         uni.count()
 
-        def _keys(col: str) -> list | None:
-            """Distinct non-null batch values of ``col`` — or ``None``
-            when the batch exceeds ``LM_PRUNE_MAX_KEYS`` distinct
-            values (spanmaint's bulk-batch regime: a bulk batch over
-            web text carries ~1e5-1e6 distinct tokens, saturating the
-            uniform-hash cluster ranges — past that point the pruned
-            read touches every file anyway, so skip the driver-side
-            collect and read the full column-pruned table)."""
-            d = toks.filter(F.col(col).isNotNull()).select(col).distinct()
-            if d.count() > LM_PRUNE_MAX_KEYS:
-                return None
-            return [r[col] for r in d.collect()]
-
-        prevs = _keys("prev")
-        prev2s = _keys("prev2") if order >= 3 else []
-        # the ctx_c2 re-key probes the bigram table with prev2 values in
-        # its prev position, so the pruned read needs both key sets;
-        # either set over the cap -> full read for the bigram table
-        big_keys = (
-            sorted(set(prevs) | set(prev2s))
-            if prevs is not None and prev2s is not None
-            else None
-        )
-        if big_keys is None:
-            pruned = read_snapshot(spark, big_path)
-        elif big_keys:
-            pruned = read_snapshot_pruned(spark, big_path, big_keys)
-        else:
-            pruned = None
+        # keyed probes (probe_snapshot): a bulk batch over web text
+        # carries ~1e5-1e6 distinct tokens, past snapshot.PRUNE_MAX_KEYS,
+        # saturating the uniform-hash cluster ranges, so it skips the
+        # driver-side collect and reads the full column-pruned table.
+        # The ctx_c2 re-key probes the bigram table with prev2 values in
+        # its prev position, so the bigram keys are prev ∪ prev2
+        big_keys = toks.select(F.col("prev").alias("k"))
+        if order >= 3:
+            big_keys = big_keys.union(toks.select(F.col("prev2").alias("k")))
+        pruned = probe_snapshot(spark, big_path, big_keys)
         big = (
             fold_bigrams(pruned)
             if pruned is not None
@@ -289,12 +269,7 @@ def extend_lm(
         )
         tri = None
         if order >= 3:
-            if prev2s is None:
-                tri_pruned = read_snapshot(spark, tri_path)
-            elif prev2s:
-                tri_pruned = read_snapshot_pruned(spark, tri_path, prev2s)
-            else:
-                tri_pruned = None
+            tri_pruned = probe_snapshot(spark, tri_path, toks.select("prev2"))
             tri = (
                 fold_trigrams(tri_pruned)
                 if tri_pruned is not None

@@ -50,7 +50,7 @@ from ..operators.multimodal import (
     phash_hamming,
     phash_signatures,
 )
-from ..sinks.snapshot import read_snapshot_pruned, write_snapshot
+from ..sinks.snapshot import probe_snapshot, write_snapshot
 from .compaction import CompactionSpec, read_json_stream, start_snapshot_stream
 from .curation import DOC_SCHEMA
 
@@ -91,12 +91,9 @@ def extend_phash(
         )
 
         # ---- pairs from the committed index, key-pruned -------------
-        # the key list is domain-bounded (<= 65,536 16-bit values), so
-        # the driver-side collect can never grow with the corpus
-        keys = [
-            r["key"] for r in batch_bands.select("key").distinct().collect()
-        ]
-        corpus = read_snapshot_pruned(spark, index_path, keys)
+        # the key set is domain-bounded (<= 65,536 16-bit values, under
+        # snapshot.PRUNE_MAX_KEYS), so the probe always prunes
+        corpus = probe_snapshot(spark, index_path, batch_bands.select("key"))
         if corpus is None:  # no committed files can match: no pairs
             pairs = spark.createDataFrame(
                 [], "doc_a long, doc_b long, hamming long"

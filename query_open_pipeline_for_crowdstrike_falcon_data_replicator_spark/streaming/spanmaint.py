@@ -43,8 +43,8 @@ never re-derived); batch-internal work is the batch-local winner
 groupBy; the rebuild is the batch operator's posexplode + keyed
 anti-join at batch grain.  The index is WRITTEN clustered by window
 hash (``write_snapshot(cluster_col="w")`` — per-file [min, max] in the
-manifest), and a trickle batch (<= SPAN_PRUNE_MAX_KEYS distinct
-windows) plans its probe from those stats via ``read_snapshot_pruned``,
+manifest), and a trickle batch (<= ``snapshot.PRUNE_MAX_KEYS`` distinct
+windows) plans its probe from those stats via ``probe_snapshot``,
 reading ~B of the index's N files instead of all of them; a bulk batch
 saturates the uniform-hash ranges and keeps the full column-pruned
 scan.
@@ -65,21 +65,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import SUBSTRING_K, _window_hashes
-from ..sinks.snapshot import read_snapshot_pruned, write_snapshot
+from ..sinks.snapshot import probe_snapshot, write_snapshot
 from .compaction import CompactionSpec, read_json_stream, start_snapshot_stream
-from .curation import DOC_SCHEMA, _snapshot_or_none
+from .curation import DOC_SCHEMA
 
 CLEAN_TABLE = "cleaned"
 WINDOWS_TABLE = "index/windows"
-
-# Probe-pruning regime gate: with at most this many distinct batch
-# window hashes, the batch's keys are collected driver-side (they ship
-# there for the broadcast join anyway) and the index read is planned
-# from the manifest's per-file [min, max] — a trickle batch reads ~B of
-# the index's N files.  Above it the uniform keys saturate every file
-# range (expected hits N*(1-(1-1/N)^B)), so pruning buys nothing and
-# the full column-pruned scan is used without paying the collect.
-SPAN_PRUNE_MAX_KEYS = 100_000
 
 
 def extend_span_clean(
@@ -118,14 +109,11 @@ def extend_span_clean(
             "doc_id", (F.col("p0") + 1).alias("s"), "w"
         ).persist()
 
+        # the index read plans from the manifest's per-file [min, max]
+        # while the batch's distinct window hashes fit under
+        # snapshot.PRUNE_MAX_KEYS (a trickle batch reads ~B of N files)
         batch_keys = occ.select("w").distinct()
-        n_keys = batch_keys.count()
-        if n_keys <= SPAN_PRUNE_MAX_KEYS:
-            corpus_idx = read_snapshot_pruned(
-                spark, windows_path, [r["w"] for r in batch_keys.collect()]
-            )
-        else:
-            corpus_idx = _snapshot_or_none(spark, windows_path)
+        corpus_idx = probe_snapshot(spark, windows_path, batch_keys)
 
         # rule 1: window known to the corpus -> remove this occurrence.
         # The batch side broadcasts into the corpus-sized index probe.

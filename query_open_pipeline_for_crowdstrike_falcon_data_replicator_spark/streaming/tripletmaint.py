@@ -38,7 +38,7 @@ Scale shape: the batch side broadcasts into both corpus-sized joins
 (the label-blocked pair join and the mined-anchors anti-join); the
 index is written clustered by label (``write_snapshot(cluster_col=
 "label")``), so the pair join's corpus read prunes to the batch's
-distinct labels via the manifest stats (``read_snapshot_pruned`` — the
+distinct labels via the manifest stats (``probe_snapshot`` — the
 same trickle-regime mechanics as the window/band indexes, and labels
 are low-cardinality, so pruning holds even for bulk batches); the
 negative probe touches ~nprobe/K of the corpus by construction.  At
@@ -79,10 +79,13 @@ from ..operators.similarity import (
     _probe_cells,
     _rank1_negatives,
 )
-from ..sinks.snapshot import read_snapshot_pruned, write_snapshot
+from ..sinks.snapshot import (
+    probe_snapshot,
+    read_snapshot_or_none,
+    write_snapshot,
+)
 from ..sinks.fsutil import json_meta_io
 from .compaction import CompactionSpec, read_json_stream, start_snapshot_stream
-from .curation import _snapshot_or_none
 
 EMB_SCHEMA = StructType(
     [
@@ -155,14 +158,7 @@ def extend_triplets(
 
         # new positive pairs: batch members as the HIGHER (new) side vs
         # the label-pruned corpus read ∪ the batch itself as lower side
-        batch_labels = [
-            r["label"] for r in batch.select("label").distinct().collect()
-        ]
-        corpus = (
-            read_snapshot_pruned(spark, index_path, batch_labels)
-            if batch_labels
-            else None
-        )
+        corpus = probe_snapshot(spark, index_path, batch.select("label"))
         lower = assigned.select(
             F.col("neighbor_id").alias("vec_a"),
             "label",
@@ -195,7 +191,7 @@ def extend_triplets(
         # corpus — the sequential oracle freezes mining at
         # min(pair_batch), and a triplets-presence key would silently
         # re-mine exactly the no-negative anchors
-        prior_pairs = _snapshot_or_none(spark, pairs_path)
+        prior_pairs = read_snapshot_or_none(spark, pairs_path)
         anchors = new_pairs.select(F.col("vec_a").alias("query_id")).distinct()
         if prior_pairs is not None:
             anchors = anchors.join(
@@ -220,7 +216,7 @@ def extend_triplets(
         )
 
         # mine: probe cells against corpus-so-far ∪ this batch
-        prior_index = _snapshot_or_none(spark, index_path)
+        prior_index = read_snapshot_or_none(spark, index_path)
         full_index = (
             prior_index.select("neighbor_id", "cu", "cell").unionByName(
                 assigned.select("neighbor_id", "cu", "cell")

@@ -20,8 +20,8 @@ a crash-replayed micro-batch is a no-op — the fence the driver probe
 
 Scale shape: the table is CLUSTERED on the merge key, so a trickle
 batch's candidate files prune manifest-level against the per-file
-[min, max] (``MERGE_PRUNE_MAX_KEYS`` gates the key collect — the
-spanmaint saturation argument); the rewrite is file-grain copy-on-
+[min, max] (``snapshot.PRUNE_MAX_KEYS`` gates the key collect — the
+probe saturation argument); the rewrite is file-grain copy-on-
 write, so per-batch cost tracks the batch's key-range footprint, not
 the table.  ``compact_every`` folds the standard snapshot compaction
 in to keep the pruning ranges tight over a long-running stream.

@@ -22,6 +22,8 @@ and tests.
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import os
 import tempfile
 from collections.abc import Callable
@@ -36,14 +38,43 @@ from ..sources.tables import load_table
 from .packing import PACKED_TABLE, STATE_TABLE, _running_total, run_packing_stream
 
 
-def _base_dir(sf_dir: str, fp: int) -> str:
-    # salted with the corpus token total (a content key): a regenerated
-    # corpus at an unchanged sf_dir gets a fresh stream run instead of a
-    # stale snapshot (ADVICE r4)
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"qopcfdr_streampack_{os.path.basename(os.path.normpath(sf_dir))}_{fp}",
+def _sources_fingerprint(root: str) -> str:
+    """md5 (12 hex digits) over every ``.py`` file under ``root``: each
+    file's relative path and bytes, in sorted order."""
+    h = hashlib.md5()
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirnames.sort()
+        for name in sorted(filenames):
+            if name.endswith(".py"):
+                path = os.path.join(dirpath, name)
+                h.update(os.path.relpath(path, root).encode())
+                with open(path, "rb") as f:
+                    h.update(f.read())
+    return h.hexdigest()[:12]
+
+
+@functools.cache
+def _code_fingerprint() -> str:
+    """The package's source fingerprint, computed once per process."""
+    return _sources_fingerprint(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
+
+
+def _sf_name(sf_dir: str) -> str:
+    return os.path.basename(os.path.normpath(sf_dir))
+
+
+def _stage_dir(name: str, *key) -> str:
+    """The ``build_once`` directory of one oracle entry's built lake,
+    ``$TMPDIR/qopcfdr_<name>_<key...>_<code>``.  The key holds the
+    entry's parameters, salted with a corpus content fingerprint where
+    there is one (a regenerated corpus at an unchanged sf_dir gets a
+    fresh stream run instead of a stale snapshot); ``<code>`` is the
+    package's source fingerprint, so a lake built by other code is
+    never read back as this code's result."""
+    parts = [f"qopcfdr_{name}", *map(str, key), _code_fingerprint()]
+    return os.path.join(tempfile.gettempdir(), "_".join(parts))
 
 
 def _write_ordered_batches(
@@ -114,7 +145,11 @@ def stream_pack_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(os.path.join(stage, "_COMPLETE"), "w") as f:
             f.write(str(expected_total))
 
-    base = build_once(_base_dir(sf_dir, expected_total), "_COMPLETE", _build)
+    base = build_once(
+        _stage_dir("streampack", _sf_name(sf_dir), expected_total),
+        "_COMPLETE",
+        _build,
+    )
     out = os.path.join(base, "out")
     packed = read_snapshot(spark, os.path.join(out, PACKED_TABLE))
     return (
@@ -230,9 +265,7 @@ def ocsf_stream_verify(spark: SparkSession, _sf_dir: str) -> DataFrame:
             f.write(json.dumps({"n": N_VERIFY, "n_fix": n_fix}))
 
     base = build_once(
-        os.path.join(
-            tempfile.gettempdir(), f"qopcfdr_stream_verify_{N_VERIFY}_{n_fix}"
-        ),
+        _stage_dir("stream_verify", N_VERIFY, n_fix),
         "_COMPLETE",
         _build,
     )
@@ -323,11 +356,7 @@ def stream_curate_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write(fp)
 
     base = build_once(
-        os.path.join(
-            tempfile.gettempdir(),
-            "qopcfdr_streamcurate_"
-            f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}",
-        ),
+        _stage_dir("streamcurate", _sf_name(sf_dir), fp),
         "_COMPLETE",
         _build,
     )
@@ -528,11 +557,7 @@ def stream_graph_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write(fp)
 
     base = build_once(
-        os.path.join(
-            tempfile.gettempdir(),
-            "qopcfdr_streamgraph_"
-            f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}",
-        ),
+        _stage_dir("streamgraph", _sf_name(sf_dir), fp),
         "_COMPLETE",
         _build,
     )
@@ -702,11 +727,7 @@ def stream_span_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write(fp)
 
     base = build_once(
-        os.path.join(
-            tempfile.gettempdir(),
-            "qopcfdr_streamspan_"
-            f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}",
-        ),
+        _stage_dir("streamspan", _sf_name(sf_dir), fp),
         "_COMPLETE",
         _build,
     )
@@ -790,11 +811,7 @@ def stream_triplet_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write(fp)
 
     base = build_once(
-        os.path.join(
-            tempfile.gettempdir(),
-            "qopcfdr_streamtriplet_"
-            f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}",
-        ),
+        _stage_dir("streamtriplet", _sf_name(sf_dir), fp),
         "_COMPLETE",
         _build,
     )
@@ -968,11 +985,7 @@ def stream_ann_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write(fp)
 
     base = build_once(
-        os.path.join(
-            tempfile.gettempdir(),
-            "qopcfdr_streamann_"
-            f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}",
-        ),
+        _stage_dir("streamann", _sf_name(sf_dir), fp),
         "_COMPLETE",
         _build,
     )
@@ -1130,11 +1143,7 @@ def stream_ann_drift_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write(fp)
 
     base = build_once(
-        os.path.join(
-            tempfile.gettempdir(),
-            "qopcfdr_streamanndrift_"
-            f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}",
-        ),
+        _stage_dir("streamanndrift", _sf_name(sf_dir), fp),
         "_COMPLETE",
         _build,
     )
@@ -1292,11 +1301,7 @@ def stream_lm_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write(fp)
 
     base = build_once(
-        os.path.join(
-            tempfile.gettempdir(),
-            "qopcfdr_streamlm_"
-            f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}",
-        ),
+        _stage_dir("streamlm", _sf_name(sf_dir), fp),
         "_COMPLETE",
         _build,
     )
@@ -1424,14 +1429,7 @@ def stream_export_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write(fp)
 
     base = build_once(
-        os.path.join(
-            tempfile.gettempdir(),
-            # path segment versioned (exportc2 = compact_every=2 inside
-            # the oracled stream): a stale uncompacted /tmp build must
-            # not satisfy the compacted probe
-            "qopcfdr_streamexportc2_"
-            f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}",
-        ),
+        _stage_dir("streamexportc2", _sf_name(sf_dir), fp),
         "_COMPLETE",
         _build,
     )
@@ -1530,11 +1528,7 @@ def stream_phash_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write(fp)
 
     base = build_once(
-        os.path.join(
-            tempfile.gettempdir(),
-            "qopcfdr_streamphash_"
-            f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}",
-        ),
+        _stage_dir("streamphash", _sf_name(sf_dir), fp),
         "_COMPLETE",
         _build,
     )
@@ -1633,11 +1627,7 @@ def snapshot_cdc_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write(fp)
 
     base = build_once(
-        os.path.join(
-            tempfile.gettempdir(),
-            "qopcfdr_snapcdc_"
-            f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}",
-        ),
+        _stage_dir("snapcdc", _sf_name(sf_dir), fp),
         "_COMPLETE",
         _build,
     )
@@ -1731,11 +1721,7 @@ def snapshot_delete_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write(fp)
 
     base = build_once(
-        os.path.join(
-            tempfile.gettempdir(),
-            "qopcfdr_snapdel_"
-            f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}",
-        ),
+        _stage_dir("snapdel", _sf_name(sf_dir), fp),
         "_COMPLETE",
         _build,
     )
@@ -1805,11 +1791,7 @@ def snapshot_schema_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write(fp)
 
     base = build_once(
-        os.path.join(
-            tempfile.gettempdir(),
-            "qopcfdr_snapschema_"
-            f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}",
-        ),
+        _stage_dir("snapschema", _sf_name(sf_dir), fp),
         "_COMPLETE",
         _build,
     )
@@ -1886,11 +1868,7 @@ def snapshot_merge_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write(fp)
 
     base = build_once(
-        os.path.join(
-            tempfile.gettempdir(),
-            "qopcfdr_snapmerge_"
-            f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}",
-        ),
+        _stage_dir("snapmerge", _sf_name(sf_dir), fp),
         "_COMPLETE",
         _build,
     )
@@ -1971,11 +1949,7 @@ def stream_upsert_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write(fp)
 
     base = build_once(
-        os.path.join(
-            tempfile.gettempdir(),
-            "qopcfdr_streamupsert_"
-            f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}",
-        ),
+        _stage_dir("streamupsert", _sf_name(sf_dir), fp),
         "_COMPLETE",
         _build,
     )

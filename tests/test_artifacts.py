@@ -88,3 +88,32 @@ def test_corpus_fingerprint_tracks_content(spark):
     )
     fa, fb = corpus_fingerprint(a), corpus_fingerprint(b)
     assert fa == "2x2" and fb == "3x3" and fa != fb
+
+
+def test_stream_oracle_stage_dirs_keyed_by_code(tmp_path, monkeypatch):
+    """The streamed oracle entries' ``build_once`` directories carry the
+    package's source fingerprint: the same code maps to the same cached
+    lake, other code to a fresh one (so an oracle never reads back a
+    lake built by older code).  Starts no stream."""
+    from query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.streaming import (
+        verify,
+    )
+
+    monkeypatch.setattr(verify, "_code_fingerprint", lambda: "aaaa")
+    a = verify._stage_dir("snapmerge", "sf0.01", "fp1")
+    assert a == verify._stage_dir("snapmerge", "sf0.01", "fp1")
+    assert os.path.basename(a) == "qopcfdr_snapmerge_sf0.01_fp1_aaaa"
+    monkeypatch.setattr(verify, "_code_fingerprint", lambda: "bbbb")
+    assert verify._stage_dir("snapmerge", "sf0.01", "fp1") != a
+
+    # the fingerprint follows .py bytes and nothing else
+    pkg = tmp_path / "pkg"
+    (pkg / "sub").mkdir(parents=True)
+    (pkg / "sub" / "m.py").write_text("x = 1\n")
+    (pkg / "notes.txt").write_text("a")
+    fp = verify._sources_fingerprint(str(pkg))
+    assert fp == verify._sources_fingerprint(str(pkg))
+    (pkg / "notes.txt").write_text("b")
+    assert verify._sources_fingerprint(str(pkg)) == fp
+    (pkg / "sub" / "m.py").write_text("x = 2\n")
+    assert verify._sources_fingerprint(str(pkg)) != fp

@@ -145,28 +145,28 @@ def test_lm_stream_incremental_and_exactly_once(spark, tmp_path):
 
 def test_lm_bulk_batch_skips_prune_collect_same_scores(spark, tmp_path):
     """A bulk batch with more distinct context tokens than
-    LM_PRUNE_MAX_KEYS must SKIP the driver-side key collect and serve
+    snapshot.PRUNE_MAX_KEYS must SKIP the driver-side key collect and serve
     from the full column-pruned count tables — with scores identical
     to the pruned-read path (pruning is a read optimization, never a
     semantics change).  Pinned by forcing the cap below the batch's
     vocabulary and diffing against an uncapped twin run."""
-    import query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.streaming.lmmaint as lmmaint
+    import query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sinks.snapshot as snapshot
 
     runs = {}
-    orig = lmmaint.LM_PRUNE_MAX_KEYS
+    orig = snapshot.PRUNE_MAX_KEYS
     for tag, cap in (("pruned", orig), ("bulk", 2)):
         src = str(tmp_path / f"in_{tag}")
         out = str(tmp_path / f"lm_{tag}")
         ckpt = str(tmp_path / f"ckpt_{tag}")
         _write_batch(src, "b1.json", B1)
         _write_batch(src, "b2.json", B2)
-        lmmaint.LM_PRUNE_MAX_KEYS = cap
+        snapshot.PRUNE_MAX_KEYS = cap
         try:
             # order 3 exercises the trigram fallback branch too
             q = run_lm_stream(spark, src, out, ckpt, order=3)
             assert q.awaitTermination(300), "stream did not drain in 300s"
         finally:
-            lmmaint.LM_PRUNE_MAX_KEYS = orig
+            snapshot.PRUNE_MAX_KEYS = orig
         runs[tag] = _scores(spark, out)
     # B1 has >2 distinct prev tokens, so cap=2 forces the full-read
     # regime for bigrams AND trigrams; the streamed hashes must agree

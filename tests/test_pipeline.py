@@ -26,7 +26,7 @@ from .fdr_fixtures import EXPECTED_COUNTS, write_fixture_files
 def ocsf_out(spark, tmp_path_factory):
     src = write_fixture_files(str(tmp_path_factory.mktemp("fdr_raw")))
     out = str(tmp_path_factory.mktemp("ocsf"))
-    run_batch(spark, src, out, region="us-east-1", account_id="123456789012", mode="overwrite")
+    run_batch(spark, src, out, region="us-east-1", account_id="123456789012")
     return out
 
 
@@ -154,7 +154,7 @@ def test_cast_failure_quarantine(spark, tmp_path):
     parsed = parse_fdr_lines(
         spark.createDataFrame([(l,) for l in lines], ["value"]).repartition(1)
     )
-    process_batch(spark, parsed, out, mode="overwrite")
+    process_batch(spark, parsed, out)
 
     q = spark.read.parquet(f"{out}/_quarantine/cast_failures").collect()
     by_sink = {}

@@ -321,6 +321,40 @@ def test_snapshot_clustered_write_stats_and_pruned_read(spark, tmp_path):
     assert read_snapshot_pruned(spark, path, [10_000_000]) is None
 
 
+def test_probe_snapshot_three_regimes(spark, tmp_path, monkeypatch):
+    """probe_snapshot, the twins' one keyed probe: keys under the cap
+    read only the files whose [min, max] can hold one; keys over the
+    cap skip the prune and read every file; no key (NULLs only) or a
+    missing table returns None."""
+    import query_open_pipeline_for_crowdstrike_falcon_data_replicator_spark.sinks.snapshot as snap
+
+    path = str(tmp_path / "tbl")
+    for lo in (0, 100, 200):  # one clustered file per append, disjoint
+        write_snapshot(
+            spark,
+            spark.range(lo, lo + 100).selectExpr("id AS w"),
+            path,
+            cluster_col="w",
+        )
+    every = set(read_snapshot(spark, path).inputFiles())
+    assert len(every) >= 3
+
+    def keys(*ks):
+        return spark.createDataFrame([(k,) for k in ks], "w long")
+
+    pruned = snap.probe_snapshot(spark, path, keys(5, 5, None))
+    assert len(pruned.inputFiles()) == 1
+    assert set(pruned.inputFiles()) < every
+    assert {r.w for r in pruned.filter(F.col("w") == 5).collect()} == {5}
+
+    monkeypatch.setattr(snap, "PRUNE_MAX_KEYS", 2)
+    assert set(snap.probe_snapshot(spark, path, keys(5, 6, 7)).inputFiles()) == every
+
+    assert snap.probe_snapshot(spark, path, keys(None)) is None
+    assert snap.probe_snapshot(spark, path, keys().limit(0)) is None
+    assert snap.probe_snapshot(spark, str(tmp_path / "missing"), keys(5)) is None
+
+
 def test_snapshot_clustered_compaction_tightens_ranges(spark, tmp_path):
     """Appends to a clustered snapshot each span the whole key range;
     compaction re-clusters (repartitionByRange over the union), so the
